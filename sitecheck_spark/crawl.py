@@ -12,30 +12,45 @@ become POST requests crawled independently of their GET twins.
                      phase 1 ranks within (netloc, salt) so one skew host
                      cannot pin a single reducer; phase 2 ranks the <= B*salts
                      survivors per netloc — provably equal to the unsalted
-                     global per-host top-B)
+                     global per-host top-B), computed ONCE per wave as one
+                     persisted frame with a win flag; elected and remainder
+                     are filters of it
       3. fetch     = elected left-join latest pages on url (J1)
       4. parse     = ONE vectorized mapInPandas pass (C6) emitting outlinks +
                      text + title + meta + comments + a status column (fetch
                      misses pass through as 404 rows, so the html-carrying
                      join output is never cached); the only place html is
-                     ever read (column pruning, SURVEY.md §4)
+                     ever read (column pruning, SURVEY.md §4); parsed is
+                     checkpointed
       5. checkers  = DataFrame builders over parsed (C2..C5, C7), all JVM
                      checkers + the spelling token explode fused into one
-                     scan of the parsed cache
+                     scan of the parsed checkpoint
       6. cand      = explode(outlinks) ∪ meta-refresh targets (hop-capped
                      redirect chains) -> ext/domain/depth filters ->
                      groupBy(url).min(struct(depth, referrer, redirects))
       7. new       = bloom-shard probe (cogroup applyInPandas) -> exact
                      anti-join fallback only for bloom-positives (A1/J2)
       8. gate      = robots verdicts on the *new* urls only (R1) — each url
-                     is gated exactly once in its lifetime
+                     is gated exactly once in its lifetime; gated is
+                     checkpointed
       9. frontier' = politeness remainder ∪ gated-new;  seen' = seen ∪ new
-     10. optional atomic wave checkpoint (S4/R3) -> resume-exactly
+     10. materialize = each state/delta table written ONCE, all concurrently:
+                     in resumable mode the atomic wave commit (S4/R3) is the
+                     write and the next wave reads the committed parquet
+                     back (resume-exactly); otherwise localCheckpoint. The
+                     next frontier's size is an observed row count of that
+                     write — no count job
 
 Scale notes (10^10-URL frontier): all state is DataFrames — nothing
-materializes on the driver. Cross-wave lineage is truncated every wave
-(localCheckpoint, or the checkpoint tables themselves when resumable mode is
-on) so plans stay O(1) per wave. The seen set is sharded bloom bits probed
+materializes on the driver. Cross-wave lineage is truncated every wave by
+that one materialization (the committed parquet tables in resumable mode,
+localCheckpoint otherwise), so plans stay O(1) per wave and no table is
+written twice. Within a wave, the tables read by several later jobs are
+checkpoints (budgets, rules, parsed, gated) rather than caches, so no plan
+nests another cached plan: Spark renders a cached plan into the text of
+every query over it, twice under AQE, and that text is rebuilt on every
+adaptive re-plan. The election alone stays a cache, filled by the parse
+job. The seen set is sharded bloom bits probed
 via cogroup — the exact anti-join only ever sees bloom-positive candidates
 (true dups + ~1% false positives), so the expensive shuffle join shrinks by
 ~the novelty rate. Shard count and bloom sizing are config knobs sized so
@@ -44,14 +59,16 @@ one shard's bits fit comfortably in one task (default 2^17 bits = 16 KiB).
 
 from __future__ import annotations
 
+import functools
 import re
 import time
 from dataclasses import dataclass, field
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator, TypeVar
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sitecheck_spark import robots as robots_mod
@@ -61,7 +78,9 @@ from sitecheck_spark.functions.urls import canonicalize, netloc_of
 from sitecheck_spark.golden import IGNORED_EXTENSIONS
 from sitecheck_spark.seen import BloomShard, CuckooShard
 from sitecheck_spark.sources import catalog as catalog_mod
-from sitecheck_spark.sources.catalog import WaveCatalog
+from sitecheck_spark.sources.catalog import WaveCatalog, ckpt_label, run_concurrently
+
+T = TypeVar("T")
 
 
 @dataclass
@@ -100,14 +119,13 @@ class CrawlConfig:
     pages_prebucketed: bool = False
     run_checkers: bool = True
     verbose: bool = False
-    # Attribution mode for the scaling telemetry: force the wave chain's
-    # persisted layers in dependency order under DISTINCT callSite labels
-    # (wave_elect / wave_fetch_parse / wave_probe_gate) instead of one
-    # fused wave_chain job, so N-vs-4N stage tables localize co-scheduling
-    # inflation to a sub-phase. Total work is unchanged (elected and parsed
-    # are persisted in production mode too); only cross-phase pipelining
-    # overlap is lost, so wall time reads slightly higher — keep False
-    # outside benchmarking.
+    # Attribution mode for the scaling telemetry: run the wave chain's
+    # materializations under DISTINCT callSite labels (wave_elect /
+    # wave_fetch_parse / wave_probe_gate) instead of one wave_chain label,
+    # so N-vs-4N stage tables localize co-scheduling inflation to a
+    # sub-phase. It adds one job per wave (elected is counted on its own,
+    # which fills the election cache the parse job would fill); total work
+    # is otherwise unchanged — keep False outside benchmarking.
     phase_labels: bool = False
     # Broadcast the elected url set into the pages scan (no corpus shuffle).
     # Right whenever one wave's election fits in executor memory. Set False
@@ -464,47 +482,10 @@ def crawl(
         robots = robots_from_pages(pages)
     robots = robots.persist()
 
-    budgets = robots.mapInPandas(
-        _budgets_fn(cfg.budget_per_host), _BUDGET_SCHEMA
-    ).persist()
-    # persisted in ARRAY form (one row per netloc): every wave's gate join
-    # is fan-out-free and needs no re-aggregation (_robots_gate)
-    rules = _rules_array(
-        robots.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
-    ).persist()
-
-    comp_map = None
-    if host_components is not None:
-        # static per-crawl mapping netloc -> (election group, group budget):
-        # the group budget is the MIN member budget — the politest member
-        # governs the whole mirror cluster. Computed once (host-table-sized,
-        # tiny next to the frontier); each wave's election joins it.
-        per_host = (
-            host_components.select(
-                "netloc", F.col("component").cast("string").alias("_comp")
-            )
-            .join(budgets, "netloc", "left")
-            .withColumn("budget", F.coalesce("budget", F.lit(cfg.budget_per_host)))
-        )
-        grp_budget = per_host.groupBy("_comp").agg(
-            F.min("budget").alias("_gbudget")
-        )
-        comp_map = (
-            per_host.join(grp_budget, "_comp")
-            .select(
-                "netloc",
-                # '\n' can never appear in a netloc (host[:port] — urlsplit
-                # rejects control characters), so the prefix cannot collide
-                # with a real netloc group key. NOTE: ':' was the old
-                # separator and CAN occur in a netloc (non-default port,
-                # functions/urls.py keeps it): a host literally named
-                # 'component' with port N would have collided with the
-                # component-N pool and silently shared its election.
-                F.concat(F.lit("component\n"), "_comp").alias("_grp"),
-                "_gbudget",
-            )
-            .persist()
-        )
+    # budgets, rules, comp_map: checkpointed on first use, so a resume with
+    # no wave left to run launches no job
+    wave_tables = functools.cache(
+        lambda: _wave_tables(robots, cfg, host_components))
 
     # Collect the spelling dictionary ONCE for all waves: checkers fold it
     # into the fused findings scan as an array_except literal (checkers.py
@@ -537,13 +518,18 @@ def crawl(
         WaveCatalog(cfg.checkpoint_dir, spark) if cfg.checkpoint_dir else None
     )
     resumed_from = catalog.last_committed_wave() if catalog else None
+    if resumed_from is not None:
+        catalog.heal_manifest()  # this crawl is the catalog's one writer
 
     pending_findings: list[DataFrame] = []  # pre-wave-0 (seed gating) findings
     shards: DataFrame | None = None
     force_seen_full = False  # set when resume migrated the seen schema
 
     if resumed_from is not None:
-        # Resume-exactly: rebuild state from the last committed wave.
+        # Resume-exactly: the last committed wave's parquet IS the state.
+        # Reads are lazy and carry the schema recorded at commit (no
+        # checkpoint job, no schema-inference job), and the frontier size
+        # comes from the manifest, not a count job.
         frontier = catalog.read_table(spark, "frontier", resumed_from)
         if "redirects" not in frontier.columns:  # pre-contract-v2 checkpoint
             frontier = frontier.withColumn("redirects", F.lit(0))
@@ -551,9 +537,8 @@ def crawl(
             frontier = frontier.withColumn("verb", F.lit("GET")).withColumn(
                 "post_data", F.lit("")
             )
-        frontier = frontier.localCheckpoint(eager=True)
         seen = catalog.read_state(spark, "seen", resumed_from)
-        ck_cfg = (catalog.read_manifest() or {}).get("config", {})
+        ck_cfg = catalog.manifest.get("config", {})
         # Shard bits are only reusable if they were built under the SAME
         # identity hash, shard modulus, and filter kind as this run probes
         # with; otherwise probe false-negatives skip the exact anti-join
@@ -582,17 +567,17 @@ def crawl(
             # Force the first commit of the resumed run to be a full v3
             # snapshot so the on-disk chain is schema-uniform again.
             force_seen_full = True
-        seen = seen.localCheckpoint(eager=True)
         if cfg.use_bloom:
             if rebuild_shards:
                 shards = _merge_shards(spark, seen, None, cfg)
             else:
                 shards = catalog.read_table(spark, "shards", resumed_from)
-                shards = shards.localCheckpoint(eager=True)
+        n_frontier = catalog.manifest["waves"][str(resumed_from)]["metrics"][
+            "n_frontier_next"]
         wave = resumed_from + 1
     else:
         # Gate the seeds (wave 0 of the contract).
-        gated_seeds = _robots_gate(seeds_df, rules, frontier_cols)
+        gated_seeds = _robots_gate(seeds_df, wave_tables()[1], frontier_cols)
         blocked_seeds = gated_seeds.filter(~F.col("robots_allowed"))
         pending_findings.append(
             blocked_seeds.select(
@@ -600,8 +585,11 @@ def crawl(
                 F.lit("robots_blocked").alias("detail"), "referrer",
             )
         )
-        frontier = gated_seeds.filter("robots_allowed").select(*frontier_cols)
+        frontier, frontier_rows = _observe_rows(
+            gated_seeds.filter("robots_allowed").select(*frontier_cols)
+        )
         frontier = frontier.localCheckpoint(eager=True)
+        n_frontier = frontier_rows.get["rows"]
 
         seen = _with_identity(
             seeds_df.select("url", "verb", "post_data"), cfg.n_shards
@@ -610,16 +598,15 @@ def crawl(
             shards = _merge_shards(spark, seen, None, cfg)
         wave = 0
 
-    # `seen` is maintained as a UNION of checkpointed leaves: one base
+    # `seen` is maintained as a UNION of materialized leaves: one base
     # snapshot plus one delta per wave since the last compaction. Each wave
-    # checkpoints only its delta — checkpointing the union would rewrite
+    # materializes only its delta — materializing the union would rewrite
     # the full cumulative seen set every wave, the same O(|seen|)-per-wave
     # cost the catalog's delta commits eliminate on disk. Compaction every
     # seen_compact_every waves collapses the union so plan fan-in and
     # cached-leaf count stay bounded.
     seen_parts: list[DataFrame] = [seen]
 
-    n_frontier = frontier.count()
     end_wave = wave
     _sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
@@ -640,14 +627,18 @@ def crawl(
                             min(8, _sess_parts)))),
             )
             prev_frontier, prev_shards = frontier, shards
+            budgets, rules, comp_map = wave_tables()
             wave_logs: list[DataFrame] = []
             wave_findings: list[DataFrame] = list(pending_findings)
             pending_findings = []
-            # Persist both election outputs: they feed several downstream jobs
-            # (broadcast of elected urls, the fetch join, the 404 split, next
-            # frontier) which would otherwise each recompute the window chain —
-            # the profiler showed half the wave's CPU inside broadcast-exchange
-            # recomputations before this.
+            # Persist the election ONCE, as one frame with a win flag: elected
+            # and remainder are filters of it. They feed several downstream
+            # jobs (broadcast of elected urls, the fetch join, the 404 split,
+            # next frontier) which would otherwise each recompute the window
+            # chain — the profiler showed half the wave's CPU inside
+            # broadcast-exchange recomputations before elected was persisted,
+            # and persisting the two outputs separately still ran the whole
+            # chain twice (once more under the frontier write).
             # NOTE (r7): an "identity election" fast path was tried here —
             # skip _elect when n_frontier <= min(all budgets), since the
             # election is then provably the identity (the equivalence is
@@ -660,9 +651,16 @@ def crawl(
             # election stages it saved on the 120k bench is not worth a
             # memory-behavior change at scale that was never fully
             # root-caused.
-            elected, remainder = _elect(frontier, budgets, cfg, comp_map)
-            elected = elected.persist()
-            remainder = remainder.persist()
+            ranked = _elect(frontier, budgets, cfg, comp_map).persist()
+            elected, remainder = _split_election(ranked)
+            # The wave chain runs as two checkpoint jobs, parsed and gated
+            # below (ranked is cached by the first), each under a
+            # callSite.short label that names its stages for the scaling
+            # telemetry (plans/stagemetrics.py); phase_labels splits them
+            # into the elect / fetch_parse / probe_gate phases.
+            t0 = time.time()
+            if cfg.phase_labels:
+                _labelled("wave_elect", elected.count)
 
             elected_urls = elected.select("url")
             fetch_keys = ["url"]
@@ -722,7 +720,7 @@ def crawl(
             # One corpus scan+join per wave, consumed EXACTLY ONCE by the parse
             # pass: fetch misses flow through as status=404 rows (null-html fast
             # path inside parse_pages_batch), so the html-carrying join output is
-            # never persisted — only the slim parsed table is. Caching the join
+            # never kept — only the slim parsed table is (checkpointed). Caching the join
             # output instead (round <= 4) meant every downstream `html IS NULL`
             # filter re-read the cached html column batches: ~15 GB/run of the
             # fetch-log job's input in the round-4 scaling stage tables was
@@ -738,12 +736,14 @@ def crawl(
                     .join(latest_rows, agg_keys, "left")
                     .drop(catalog_mod.PAGES_BUCKET_COL)
                 )
-            parsed = (
+            parsed = _labelled(
+                "wave_fetch_parse" if cfg.phase_labels else "wave_chain",
                 fetched.select("url", "netloc", F.lit(wave).alias("wave"), "depth",
                                "priority", "referrer", "redirects", "verb",
                                "post_data", "html")
                 .mapInPandas(parse_pages_batch, PARSED_SCHEMA)
-            ).persist()
+                .localCheckpoint,
+            )
             ok = parsed.filter(F.col("status") == 200)
 
             wave_logs.append(
@@ -852,9 +852,12 @@ def crawl(
                 )
                 new_shards = None
 
-            gated = _robots_gate(
-                new, rules, frontier_cols + ["url_hash", "shard"]
-            ).persist()
+            gated = _labelled(
+                "wave_probe_gate" if cfg.phase_labels else "wave_chain",
+                _robots_gate(new, rules, frontier_cols + ["url_hash", "shard"])
+                .localCheckpoint,
+            )
+            t_chain = time.time() - t0
             wave_findings.append(
                 gated.filter(~F.col("robots_allowed")).select(
                     F.lit("robots").alias("module"), "url", F.lit(wave).alias("wave"),
@@ -862,88 +865,59 @@ def crawl(
                 )
             )
 
-            # One job forces the whole heavy chain (elect -> fetch -> parse ->
-            # candidates -> probe -> gate) into the wave's caches...
-            # (callSite.short labels land in the UI stage names so the scaling
-            # telemetry (plans/stagemetrics.py) attributes task time to engine
-            # phases instead of merging everything under "count at <unknown>")
-            sc = spark.sparkContext
-            t0 = time.time()
-            if cfg.phase_labels:
-                # attribution mode: see CrawlConfig.phase_labels
-                sc.setLocalProperty("callSite.short", "wave_elect")
-                elected.count()
-                sc.setLocalProperty("callSite.short", "wave_fetch_parse")
-                parsed.count()
-                sc.setLocalProperty("callSite.short", "wave_probe_gate")
-            else:
-                sc.setLocalProperty("callSite.short", "wave_chain")
-            gated.count()
-            sc.setLocalProperty("callSite.short", None)
-            t_chain = time.time() - t0
-
-            # ...then the five independent state/delta materializations read
-            # those caches CONCURRENTLY. Sequentially they cost sum(latencies)
-            # of mostly-idle barrier time per wave; in parallel, max(latencies).
+            # Then the wave's ONE materialization of its outputs: the five
+            # independent state/delta tables, concurrently, reading the
+            # checkpoints (_materialize_wave). The next frontier's size rides along
+            # as an observed metric of its write — no count job.
             new_frontier_rows = gated.filter("robots_allowed").select(*frontier_cols)
-            frontier_next = remainder.select(*frontier_cols).unionByName(new_frontier_rows)
+            frontier_next, frontier_rows = _observe_rows(
+                remainder.select(*frontier_cols).unionByName(new_frontier_rows)
+            )
             new_seen = gated.select("url", "verb", "post_data", "url_hash", "shard")
-            log_delta = _union_all(wave_logs, empty_log)
-            findings_delta = _union_all(wave_findings, empty_findings)
             compact = force_seen_full or wave % cfg.seen_compact_every == 0
+            # seen materializes as this wave's DELTA; the full union only on
+            # compaction waves (see seen_parts above). Frontier and shards
+            # stay full-state (frontier is the small active set, shards a
+            # fixed count of fixed-size filters). Wave 0 lands on the
+            # compaction branch, so a delta chain always has a base.
+            state = {"frontier": frontier_next,
+                     "seen": seen.unionByName(new_seen) if compact else new_seen}
+            if new_shards is not None:
+                state["shards"] = new_shards
+            deltas = {"fetch_log": _union_all(wave_logs, empty_log),
+                      "findings": _union_all(wave_findings, empty_findings)}
+
+            def wave_metrics():
+                return {"wave": wave, "n_frontier_next": frontier_rows.get["rows"]}
 
             t0 = time.time()
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _ckpt(df, label):
-                # per-thread callSite label: pinned-thread mode (the PySpark
-                # default) maps each Python thread to its own JVM thread, so
-                # every concurrent state job's stages carry its table name
-                spark.sparkContext.setLocalProperty("callSite.short", label)
-                return df.localCheckpoint(eager=True)
-
-            with ThreadPoolExecutor(max_workers=5) as pool:
-                f_frontier = pool.submit(_ckpt, frontier_next, "ckpt_frontier")
-                # seen checkpoints as this wave's DELTA; the full union only on
-                # compaction waves (see seen_parts above)
-                f_seen = pool.submit(
-                    _ckpt,
-                    seen.unionByName(new_seen) if compact else new_seen,
-                    "ckpt_seen_full" if compact else "ckpt_seen_delta",
-                )
-                f_shards = (
-                    pool.submit(_ckpt, new_shards, "ckpt_shards")
-                    if new_shards is not None else None
-                )
-                f_log = pool.submit(_ckpt, log_delta, "ckpt_fetch_log")
-                f_findings = pool.submit(_ckpt, findings_delta, "ckpt_findings")
-                frontier = f_frontier.result()
-                if compact:
-                    seen = f_seen.result()
-                    for part in seen_parts:  # superseded by the collapsed union
-                        part.unpersist()
-                    seen_parts = [seen]
-                else:
-                    delta_ck = f_seen.result()
-                    seen_parts.append(delta_ck)
-                    seen = seen.unionByName(delta_ck)
-                log_delta = f_log.result()
-                findings_delta = f_findings.result()
-                if f_shards is not None:
-                    shards = f_shards.result()
-                elif cfg.use_bloom:
-                    shards = _merge_shards(spark, new_seen, shards, cfg)
+            out = _materialize_wave(
+                spark, catalog, wave, state, deltas,
+                seen_kind="full" if compact else "delta",
+                metrics=wave_metrics,
+                config={"budget_per_host": cfg.budget_per_host,
+                        "max_depth": cfg.max_depth, "seeds": seed_canon,
+                        "n_shards": cfg.n_shards,
+                        "filter_kind": cfg.filter_kind},
+            )
             t_state = time.time() - t0
+            frontier = out["frontier"]
+            if compact:
+                seen = out["seen"]
+                for part in seen_parts:  # superseded by the collapsed union
+                    part.unpersist()
+                seen_parts = [seen]
+            else:
+                seen_parts.append(out["seen"])
+                seen = seen.unionByName(out["seen"])
+            shards = out.get("shards", shards)
+            if catalog is None:
+                fetch_logs.append(out["fetch_log"])
+                findings.append(out["findings"])
+            metrics.append(wave_metrics())
+            n_frontier = metrics[-1]["n_frontier_next"]
 
-            fetch_logs.append(log_delta)
-            findings.append(findings_delta)
-
-            t0 = time.time()
-            sc.setLocalProperty("callSite.short", "frontier_count")
-            n_frontier = frontier.count()
-            sc.setLocalProperty("callSite.short", None)
-            t_count = time.time() - t0
-            # Release superseded per-wave checkpoints: without this, a long crawl
+            # Release superseded per-wave state: without this, a long crawl
             # leaks one cached RDD per wave per state table and everything after
             # it pays the GC/block-manager tax. (seen deltas are NOT superseded
             # — they compose the live union until a compaction wave collapses
@@ -951,34 +925,7 @@ def crawl(
             prev_frontier.unpersist()
             if prev_shards is not None and shards is not prev_shards:
                 prev_shards.unpersist()
-            wave_metrics = {"wave": wave, "n_frontier_next": n_frontier}
-            metrics.append(wave_metrics)
-
-            if catalog is not None:
-                # seen commits as this wave's DELTA (new_seen), with a full
-                # compaction snapshot every seen_compact_every waves (same
-                # cadence as the in-memory collapse above); frontier and shards
-                # stay full-state (frontier is the small active set, shards a
-                # fixed count of fixed-size filters). Wave 0 lands on the
-                # compaction branch, so a delta chain always has a base.
-                state = {"frontier": frontier, "seen": seen if compact else new_seen}
-                if shards is not None:
-                    state["shards"] = shards
-                catalog.commit_wave(
-                    wave, state,
-                    {"fetch_log": log_delta, "findings": findings_delta},
-                    metrics=wave_metrics,
-                    config={"budget_per_host": cfg.budget_per_host,
-                            "max_depth": cfg.max_depth, "seeds": seed_canon,
-                            "n_shards": cfg.n_shards,
-                            "filter_kind": cfg.filter_kind},
-                    state_kinds={"seen": "full" if compact else "delta"},
-                )
-
-            elected.unpersist()
-            remainder.unpersist()
-            parsed.unpersist()
-            gated.unpersist()
+            ranked.unpersist()
             if fused_handle is not None:
                 fused_handle.unpersist()
             if checker_handle is not None:
@@ -986,8 +933,7 @@ def crawl(
             if cfg.verbose:
                 print(f"[crawl] wave={wave} next_frontier={n_frontier} "
                       f"wall={time.time()-t_wave:.2f}s "
-                      f"(chain={t_chain:.1f} state={t_state:.1f} "
-                      f"count={t_count:.1f})", flush=True)
+                      f"(chain={t_chain:.1f} state={t_state:.1f})", flush=True)
             force_seen_full = False  # migration snapshot committed (first wave)
             end_wave = wave + 1
             wave += 1
@@ -998,10 +944,6 @@ def crawl(
     findings.extend(pending_findings)  # loop never ran (e.g. all seeds blocked)
 
     robots.unpersist()
-    budgets.unpersist()
-    if comp_map is not None:
-        comp_map.unpersist()
-    rules.unpersist()
 
     if catalog is not None and catalog.last_committed_wave() is not None:
         last = catalog.last_committed_wave()
@@ -1017,6 +959,106 @@ def crawl(
         fetch_log=fetch_log, findings=findings_df, seen=seen, waves=end_wave,
         metrics=metrics, shards=shards, _cached=cached,
     )
+
+
+def _wave_tables(
+    robots: DataFrame, cfg: CrawlConfig, host_components: DataFrame | None
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """(budgets, rules, comp_map): the per-crawl tables every wave reads.
+
+    They are CHECKPOINTS, not caches, as are a wave's own parsed and gated
+    tables: a plan over a cache embeds the cached plan, and Spark renders
+    it, both AQE versions of it, into every SQL-execution and
+    adaptive-update event, so nested caches grow that text 2x per level.
+    With caches here, crawl_polite's queries carried up to 5 MB of plan
+    text each, rebuilt on every re-plan: a quarter of the JVM's CPU
+    samples. A checkpoint's plan is one leaf."""
+    budgets = robots.mapInPandas(
+        _budgets_fn(cfg.budget_per_host), _BUDGET_SCHEMA
+    ).localCheckpoint(eager=True)
+    # kept in ARRAY form (one row per netloc): every wave's gate join is
+    # fan-out-free and needs no re-aggregation (_robots_gate)
+    rules = _rules_array(
+        robots.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
+    ).localCheckpoint(eager=True)
+
+    comp_map = None
+    if host_components is not None:
+        # static per-crawl mapping netloc -> (election group, group budget):
+        # the group budget is the MIN member budget — the politest member
+        # governs the whole mirror cluster. Computed once (host-table-sized,
+        # tiny next to the frontier); each wave's election joins it.
+        per_host = (
+            host_components.select(
+                "netloc", F.col("component").cast("string").alias("_comp")
+            )
+            .join(budgets, "netloc", "left")
+            .withColumn("budget", F.coalesce("budget", F.lit(cfg.budget_per_host)))
+        )
+        grp_budget = per_host.groupBy("_comp").agg(
+            F.min("budget").alias("_gbudget")
+        )
+        comp_map = (
+            per_host.join(grp_budget, "_comp")
+            .select(
+                "netloc",
+                # '\n' can never appear in a netloc (host[:port] — urlsplit
+                # rejects control characters), so the prefix cannot collide
+                # with a real netloc group key. NOTE: ':' was the old
+                # separator and CAN occur in a netloc (non-default port,
+                # functions/urls.py keeps it): a host literally named
+                # 'component' with port N would have collided with the
+                # component-N pool and silently shared its election.
+                F.concat(F.lit("component\n"), "_comp").alias("_grp"),
+                "_gbudget",
+            )
+            .localCheckpoint(eager=True)
+        )
+    return budgets, rules, comp_map
+
+
+def _labelled(label: str, action: Callable[[], T]) -> T:
+    """Run `action` (a count, an eager checkpoint) with its jobs' stages
+    named `label` (callSite.short)."""
+    sc = SparkContext.getOrCreate()
+    sc.setLocalProperty("callSite.short", label)
+    try:
+        return action()
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with a row counter riding on whatever job materializes it:
+    obs.get["rows"] is the row count once that job has run. No count job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _materialize_wave(
+    spark: SparkSession, catalog: WaveCatalog | None, wave: int,
+    state: dict[str, DataFrame], deltas: dict[str, DataFrame],
+    seen_kind: str, metrics: Callable[[], dict], config: dict,
+) -> dict[str, DataFrame]:
+    """The wave's one materialization of its state and delta tables, as
+    concurrent jobs, each under its catalog.ckpt_label (ckpt_<table>; seen:
+    ckpt_seen_full / ckpt_seen_delta). Returns {name: the materialized
+    frame}, seen as written (this wave's delta, or the full set).
+
+    Resumable mode: the catalog commit IS the materialization — each table
+    is written once, as parquet, and the returned frames read the
+    committed files back (deltas are not returned: the result reads them
+    from the catalog). In-memory mode: localCheckpoint every table."""
+    kinds = {"seen": seen_kind}
+    if catalog is None:
+        return run_concurrently(spark, {
+            name: (ckpt_label(name, kinds.get(name)),
+                   functools.partial(df.localCheckpoint, eager=True))
+            for name, df in {**state, **deltas}.items()
+        })
+    catalog.commit_wave(wave, state, deltas, metrics=metrics, config=config,
+                        state_kinds=kinds)
+    return {name: catalog.read_table(spark, name, wave) for name in state}
 
 
 def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
@@ -1035,15 +1077,21 @@ def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
 def _elect(
     frontier: DataFrame, budgets: DataFrame, cfg: CrawlConfig,
     comp_map: DataFrame | None = None,
-):
-    """Per-group top-budget election (W1/W2/J5), skew-proof. The group is
-    the netloc by default; with `comp_map` (netloc -> mirror-cluster group
-    + pooled budget, built in crawl() from connected_components output),
-    member hosts share one election pool — per-component crawl budgeting.
+) -> DataFrame:
+    """Per-group top-budget election (W1/W2/J5), skew-proof. Returns every
+    frontier row plus a boolean `_win`: the row takes one of its group's
+    fetch slots this wave. Persist the result and split it with
+    _split_election: elected and remainder are then two filters of one
+    cached frame and the window chain runs once per wave (two separately
+    persisted outputs each ran the whole chain). The group
+    is the netloc by default; with `comp_map` (netloc -> mirror-cluster
+    group + pooled budget, built in crawl() from connected_components
+    output), member hosts share one election pool — per-component crawl
+    budgeting.
 
-    Fast path first: groups whose pending count fits their budget are
-    elected wholesale — no sort, no window. Only over-budget groups enter
-    the ranking path, which is two-phase salted: phase 1 ranks within
+    Fast path first: groups whose pending count fits their budget win
+    wholesale — no sort, no window. Only over-budget groups enter the
+    ranking path, which is two-phase salted: phase 1 ranks within
     (group, salt) so one skew group cannot pin a single reducer; phase 2
     ranks the <= B*salt_buckets survivors per group. Exact: any row in a
     group's global top-B is in the top-B of its salt bucket, so phase 1
@@ -1064,34 +1112,39 @@ def _elect(
     else:
         fr = fr.withColumn("_grp", F.col("netloc"))
     host_counts = fr.groupBy("_grp").agg(F.count("*").alias("n_pending"))
-    fr = fr.join(host_counts, "_grp")
-    under = fr.filter(F.col("n_pending") <= F.col("budget"))
-    over = fr.filter(F.col("n_pending") > F.col("budget"))
-
-    elected_fast = under.drop("budget", "n_pending", "_grp")
+    counted = fr.join(host_counts, "_grp")
+    under = counted.filter(F.col("n_pending") <= F.col("budget"))
+    over = counted.filter(F.col("n_pending") > F.col("budget"))
 
     over = over.withColumn(
         "salt", F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)).cast("int")
     )
     # total crawl order (contract v3): (priority, url, verb, post_data)
-    w1 = Window.partitionBy("_grp", "salt").orderBy(
-        "priority", "url", "verb", "post_data"
+    order = ("priority", "url", "verb", "post_data")
+    over = over.withColumn(
+        "rk1", F.row_number().over(Window.partitionBy("_grp", "salt").orderBy(*order))
     )
-    over = over.withColumn("rk1", F.row_number().over(w1))
-    surv = over.filter(F.col("rk1") <= F.col("budget"))
-    spill0 = over.filter(F.col("rk1") > F.col("budget"))
-    w2 = Window.partitionBy("_grp").orderBy(
-        "priority", "url", "verb", "post_data"
+    # Phase 2 in the same chain: phase-1 survivors of a group share the
+    # partition (group, -1) and rank there; the rows phase 1 cut keep their
+    # (group, salt) partition and lose, so no partition holds more than
+    # one salt bucket's rows or B*salt_buckets survivors.
+    over = over.withColumn(
+        "_p2", F.when(F.col("rk1") <= F.col("budget"), F.lit(-1))
+        .otherwise(F.col("salt"))
+    ).withColumn(
+        "rk2", F.row_number().over(Window.partitionBy("_grp", "_p2").orderBy(*order))
     )
-    surv = surv.withColumn("rk2", F.row_number().over(w2))
-    elected_ranked = surv.filter(F.col("rk2") <= F.col("budget")).drop(
-        "budget", "n_pending", "_grp", "salt", "rk1", "rk2"
+    cols = frontier.columns
+    return under.select(*cols, F.lit(True).alias("_win")).unionByName(
+        over.select(*cols, ((F.col("_p2") == -1)
+                            & (F.col("rk2") <= F.col("budget"))).alias("_win"))
     )
-    spill1 = surv.filter(F.col("rk2") > F.col("budget"))
-    remainder = spill0.drop("budget", "n_pending", "_grp", "salt", "rk1").unionByName(
-        spill1.drop("budget", "n_pending", "_grp", "salt", "rk1", "rk2")
-    )
-    return elected_fast.unionByName(elected_ranked), remainder
+
+
+def _split_election(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(elected, remainder) of an _elect result."""
+    return (ranked.filter(F.col("_win")).drop("_win"),
+            ranked.filter(~F.col("_win")).drop("_win"))
 
 
 def _match_path_fn(cols: list[str]):
@@ -1128,6 +1181,12 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
     this is a one-shot Arrow round-trip per url, not per wave). Catalyst
     broadcasts the host-table-sized rules side when small; at web scale it
     shuffle-joins on netloc (still fan-out-free: one row per netloc).
+
+    Precondition: `df` is unique per passthrough tuple. The gate keeps one
+    output row per input row (the rules side has one row per netloc) and
+    does not deduplicate — a duplicated input row would become a duplicated
+    frontier/seen row. Both callers satisfy it: the candidates are grouped
+    by request identity and the seeds are a sorted set.
 
     Accepts either the long form (aggregated here) or a pre-aggregated
     `_rules` DataFrame (the crawl loop persists the aggregate once). A df

@@ -84,3 +84,23 @@ def count_shuffles(df: DataFrame) -> int:
 
 def has_whole_stage_codegen(df: DataFrame) -> bool:
     return "WholeStageCodegen" in formatted_plan(df)
+
+
+def executed_node_names(df: DataFrame) -> list[str]:
+    """Node names of `df`'s executed physical plan (run an action on `df`
+    first). Walks through adaptive-execution wrappers and query stages, but
+    not into cached relations: an InMemoryTableScan is a leaf here, since
+    the plan that built the cache is not re-run by this one."""
+    names = []
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names

@@ -16,21 +16,37 @@ no Iceberg runtime jar exists in this container, so parquet it is):
     3. write manifest JSON to <base>/.manifest.tmp, fsync,
        os.rename -> <base>/manifest.json        <- THE commit point
 
+Steps 1-2 run for all of a wave's tables at once, one thread per table
+(run_concurrently), so a commit costs the slowest write, not the sum. The
+write is the crawl's only materialization of its state: the next wave reads
+the committed parquet back, with the schema the table's lineage entry
+records, so neither the read nor a resume launches a schema-inference job.
+
 A job killed anywhere before step 3 leaves the previous manifest intact:
 resume re-reads the last committed wave's state and recomputes the wave that
 died. Orphaned table dirs from the dead wave are overwritten on rewrite and
 ignored by readers (readers only follow the manifest).
+
+The catalog has a single writer, so a WaveCatalog reads the manifest once,
+on first use, keeps it in the instance and updates that copy on commit.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+T = TypeVar("T")
 
 MANIFEST = "manifest.json"
 
@@ -192,10 +208,10 @@ def verify_bucketed_table_layout(
     saw_subdir = False
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue  # writer bookkeeping (_temporary, .spark-staging, ...)
         if st.isDirectory():
             saw_subdir = True
-            continue
-        if name.startswith(("_", ".")):
             continue
         m = re.search(r"_(\d{5})\.", name)
         if not m or int(m.group(1)) >= n_buckets:
@@ -318,6 +334,49 @@ def _has_scheme(path: str) -> bool:
     return bool(re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path))
 
 
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, element and value nullable: the schema a
+    parquet read of data written with `dt` reports."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def ckpt_label(name: str, kind: str | None = None) -> str:
+    """Call-site label of the job that materializes table `name` of a wave:
+    ckpt_<name>, or ckpt_<name>_<kind> for a state table committed by kind
+    (seen: ckpt_seen_full / ckpt_seen_delta)."""
+    return f"ckpt_{name}_{kind}" if kind else f"ckpt_{name}"
+
+
+def run_concurrently(
+    spark: SparkSession, jobs: dict[str, tuple[str, Callable[[], T]]]
+) -> dict[str, T]:
+    """Run every (call-site label, fn) job on its own thread; returns
+    {name: fn()}. Sequentially a wave's independent writes cost the sum of
+    their latencies, mostly idle barrier time; in parallel, the max. Each
+    job inherits the caller's local properties (job group, description,
+    pool) through its own copy, on which it sets its label: the label names
+    the stages of every Spark job fn launches."""
+
+    def run(label, fn):
+        spark.sparkContext.setLocalProperty("callSite.short", label)
+        return fn()
+
+    with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
+        # one wrapper per job: each captures its own copy of the properties
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(run), label, fn)
+            for name, (label, fn) in jobs.items()
+        }
+        return {name: f.result() for name, f in futures.items()}
+
+
 class WaveCatalog:
     """Wave-granular checkpoint store with an atomic rename-commit manifest.
 
@@ -333,12 +392,26 @@ class WaveCatalog:
 
     `spark` is required for URI bases (the Hadoop FS lives in the JVM);
     the local fast path works without it.
+
+    Single writer: one crawl() at a time commits to a base directory. The
+    instance therefore reads the manifest from the store once, on first use
+    (`manifest`), keeps it, and updates its copy on every commit_wave — a
+    second writer committing behind an instance's back would go unseen.
+    read_manifest() always re-reads the store.
+
+    Every lineage entry records the table's schema (Spark's JSON form, all
+    fields nullable, as any parquet read returns them), so reads of
+    committed tables pass it to the parquet reader and launch no
+    schema-inference job. Entries from before schemas were recorded fall
+    back to inference.
     """
 
     def __init__(self, base_dir: str, spark: SparkSession | None = None):
         self.base = base_dir.rstrip("/")
         self.spark = spark
         self.remote = _has_scheme(self.base)
+        self._manifest: dict | None = None
+        self._loaded = False
         if not self.remote:
             os.makedirs(base_dir, exist_ok=True)
         else:
@@ -360,47 +433,77 @@ class WaveCatalog:
             return self.base + "/" + MANIFEST
         return os.path.join(self.base, MANIFEST)
 
-    def read_manifest(self) -> dict | None:
-        if self.remote:
-            fs, hpath = self._fs(self._manifest_path())
-            if not fs.exists(hpath):
-                # The remote delete+rename fallback in commit_wave has a
-                # crash window between the delete and the rename where no
-                # manifest exists — but the fully-written, hsync'd
-                # .manifest.tmp does. Recover from it rather than silently
-                # discarding every committed wave (a clean restart is
-                # correct but defeats the checkpoint store's purpose in
-                # exactly the crash it exists to survive). A torn tmp from
-                # a mid-write crash fails json parsing and is ignored.
-                _, tpath = self._fs(self.base + "/.manifest.tmp")
-                if not fs.exists(tpath):
-                    return None
-                stream = fs.open(tpath)
-                try:
-                    body = self.spark._jvm.org.apache.commons.io.IOUtils \
-                        .toString(stream, "UTF-8")
-                finally:
-                    stream.close()
-                try:
-                    return json.loads(body)
-                except ValueError:
-                    return None
-            stream = fs.open(hpath)
-            try:
-                body = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            return json.loads(body)
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
+    def _read_remote_text(self, path: str) -> str | None:
+        fs, hpath = self._fs(path)
+        if not fs.exists(hpath):
             return None
+        stream = fs.open(hpath)
+        try:
+            return self.spark._jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"
+            )
+        finally:
+            stream.close()
+
+    @property
+    def manifest(self) -> dict | None:
+        """The manifest as this instance knows it: read from the store on
+        first use, then kept and updated by commit_wave."""
+        if not self._loaded:
+            self.read_manifest()
+        return self._manifest
+
+    def read_manifest(self) -> dict | None:
+        """Read the manifest from the store and refresh the instance copy."""
+        self._manifest, self._loaded = self._load_manifest(), True
+        return self._manifest
+
+    def _load_manifest(self) -> dict | None:
+        if not self.remote:
+            try:
+                with open(self._manifest_path()) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                return None
+        body = self._read_remote_text(self._manifest_path())
+        if body is not None:
+            return json.loads(body)
+        # The remote delete+rename fallback in commit_wave has a crash
+        # window between the delete and the rename where no manifest exists
+        # — but the fully-written, hsync'd .manifest.tmp does. Recover from
+        # it rather than silently discarding every committed wave (a clean
+        # restart is correct but defeats the checkpoint store's purpose in
+        # exactly the crash it exists to survive). Only a tmp that parses
+        # AND has the manifest's shape is trusted: a torn tmp (mid-write
+        # crash) or a foreign JSON file reads as no manifest.
+        tmp = self.base + "/.manifest.tmp"
+        body = self._read_remote_text(tmp)
+        if body is None:
+            return None
+        try:
+            m = json.loads(body)
+        except ValueError:
+            return None
+        if not (isinstance(m, dict) and "committed_wave" in m
+                and isinstance(m.get("waves"), dict)):
+            return None
+        return m
+
+    def heal_manifest(self) -> None:
+        """Writer side of the tmp recovery above: when the manifest this
+        instance holds came from .manifest.tmp, rename the tmp into place,
+        so later readers take the normal path. Only the single writer calls
+        this: reads never write the store, because a reader's rename could
+        land in the middle of the writer's own delete+rename."""
+        if not self.remote or self.manifest is None:
+            return
+        fs, mpath = self._fs(self._manifest_path())
+        if not fs.exists(mpath):
+            _, tpath = self._fs(self.base + "/.manifest.tmp")
+            fs.rename(tpath, mpath)
 
     def last_committed_wave(self) -> int | None:
-        m = self.read_manifest()
+        m = self.manifest
         return None if m is None else m["committed_wave"]
 
     # -- table IO ----------------------------------------------------------
@@ -411,7 +514,10 @@ class WaveCatalog:
         return os.path.join(self.base, name, f"wave={wave}")
 
     def _write_table(self, df: DataFrame, name: str, wave: int) -> dict:
+        """Write `df` to a tmp dir and rename it into <name>/wave=<k>/;
+        returns the lineage entry (path, n_files, bytes, schema)."""
         dest = self._table_dir(name, wave)
+        schema = _nullable(df.schema).json()
         if self.remote:
             tmp = f"{self.base}/.tmp/{uuid.uuid4().hex}"
             df.write.mode("overwrite").parquet(tmp)
@@ -426,7 +532,8 @@ class WaveCatalog:
                 st.getLen() for st in fs.listStatus(dpath)
                 if st.getPath().getName().endswith(".parquet")
             ]
-            return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes)}
+            return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes),
+                    "schema": schema}
         tmp = os.path.join(self.base, ".tmp", uuid.uuid4().hex)
         df.write.mode("overwrite").parquet(tmp)
         os.makedirs(os.path.dirname(dest), exist_ok=True)
@@ -436,14 +543,31 @@ class WaveCatalog:
         sizes = [
             e.stat().st_size for e in os.scandir(dest) if e.name.endswith(".parquet")
         ]
-        return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes)}
+        return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes),
+                "schema": schema}
+
+    def _lineage(self, name: str, wave: int) -> dict | None:
+        return (self.manifest or {}).get("waves", {}).get(str(wave), {}) \
+            .get("lineage", {}).get(name)
+
+    @staticmethod
+    def _read_parquet(
+        spark: SparkSession, paths: list[str], entries: list[dict | None]
+    ) -> DataFrame:
+        """Parquet read of committed paths, with the recorded schema when
+        every entry carries the same one (no schema-inference job)."""
+        schemas = {(e or {}).get("schema") for e in entries}
+        reader = spark.read
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*paths)
 
     def read_table(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
-        return spark.read.parquet(self._table_dir(name, wave))
+        ent = self._lineage(name, wave)
+        return self._read_parquet(spark, [self._table_dir(name, wave)], [ent])
 
     def has_table(self, name: str, wave: int) -> bool:
-        m = self.read_manifest() or {}
-        return name in m.get("waves", {}).get(str(wave), {}).get("lineage", {})
+        return self._lineage(name, wave) is not None
 
     def read_state(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         """Full state of `name` as of `wave`: the newest kind="full" snapshot
@@ -452,18 +576,18 @@ class WaveCatalog:
         state). Tables committed full-state every wave — frontier, shards,
         and every pre-delta-era checkpoint (lineage entries without a
         "kind") — degrade to a single-path read."""
-        m = self.read_manifest() or {"waves": {}}
-        paths: list[str] = []
+        entries: list[dict] = []
         for k in range(wave, -1, -1):
-            ent = m["waves"].get(str(k), {}).get("lineage", {}).get(name)
+            ent = self._lineage(name, k)
             if ent is None:
                 continue
-            paths.append(ent["path"])
+            entries.append(ent)
             if ent.get("kind", "full") == "full":
                 break
-        if not paths:  # manifest predates lineage bookkeeping
+        if not entries:  # manifest predates lineage bookkeeping
             return self.read_table(spark, name, wave)
-        return spark.read.parquet(*reversed(paths))
+        entries.reverse()
+        return self._read_parquet(spark, [e["path"] for e in entries], entries)
 
     def read_deltas_through(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         """Per-wave delta tables (fetch_log / findings) unioned through
@@ -471,20 +595,22 @@ class WaveCatalog:
         orphaned dirs from a killed wave are never read — with a Hadoop-FS
         existence probe (remote-URI-safe, unlike os.path) only for waves
         predating lineage bookkeeping."""
-        m = self.read_manifest() or {"waves": {}}
         paths: list[str] = []
+        entries: list[dict | None] = []
         fs = None
         for k in range(wave + 1):
-            ent = m["waves"].get(str(k), {}).get("lineage", {}).get(f"{name}_delta")
+            ent = self._lineage(f"{name}_delta", k)
             if ent is not None:
                 paths.append(ent["path"])
+                entries.append(ent)
                 continue
             p = self._table_dir(name, k)
             if fs is None:
                 fs, _ = _hadoop_fs(spark, p)
             if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(p)):
                 paths.append(p)
-        return spark.read.parquet(*paths)
+                entries.append(None)
+        return self._read_parquet(spark, paths, entries)
 
     # -- commit ------------------------------------------------------------
 
@@ -493,32 +619,46 @@ class WaveCatalog:
         wave: int,
         state: dict[str, DataFrame],
         deltas: dict[str, DataFrame],
-        metrics: dict | None = None,
+        metrics: dict | Callable[[], dict] | None = None,
         config: dict | None = None,
         state_kinds: dict[str, str] | None = None,
     ) -> None:
-        """state_kinds marks a state table's commit as "full" (default) or
+        """Write every state and delta table of `wave` concurrently
+        (run_concurrently, each job under its ckpt_label), each to its own
+        tmp dir renamed into place, then commit the manifest.
+
+        state_kinds marks a state table's commit as "full" (default) or
         "delta" (this wave's new rows only; read back via read_state).
         Delta commits keep per-wave checkpoint I/O O(wave delta) instead of
         O(cumulative state) — the difference between linear and quadratic
-        total checkpoint bytes over a long crawl."""
-        lineage: dict[str, dict] = {}
-        for name, df in state.items():
-            ent = self._write_table(df, name, wave)
-            ent["kind"] = (state_kinds or {}).get(name, "full")
-            lineage[name] = ent
-        for name, df in deltas.items():
-            lineage[f"{name}_delta"] = self._write_table(df, name, wave)
-
-        prev = self.read_manifest() or {"waves": {}}
-        prev["committed_wave"] = wave
-        if config is not None:
-            prev["config"] = config
-        prev.setdefault("waves", {})[str(wave)] = {
-            "lineage": lineage,
-            "metrics": metrics or {},
+        total checkpoint bytes over a long crawl. `metrics` may be a
+        callable: it runs once the tables are written, so it can read
+        Observations attached to the written frames."""
+        kinds = state_kinds or {}
+        spark = self.spark or next(iter({**state, **deltas}.values())).sparkSession
+        jobs = {
+            name: (ckpt_label(name, kinds.get(name)),
+                   functools.partial(self._write_table, df, name, wave))
+            for name, df in state.items()
         }
-        body = json.dumps(prev, indent=1)
+        for name, df in deltas.items():
+            jobs[f"{name}_delta"] = (
+                ckpt_label(name),
+                functools.partial(self._write_table, df, name, wave),
+            )
+        lineage = run_concurrently(spark, jobs)
+        for name in state:
+            lineage[name]["kind"] = kinds.get(name, "full")
+        if callable(metrics):
+            metrics = metrics()
+
+        m = dict(self.manifest or {})
+        m["committed_wave"] = wave
+        if config is not None:
+            m["config"] = config
+        m["waves"] = {**m.get("waves", {}),
+                      str(wave): {"lineage": lineage, "metrics": metrics or {}}}
+        body = json.dumps(m, indent=1)
         if self.remote:
             # same tmp+rename commit point, through the Hadoop FS: hflush
             # pushes the bytes to the FS before the rename makes them the
@@ -555,10 +695,11 @@ class WaveCatalog:
                     raise IOError(
                         f"manifest rename failed under {self.base}"
                     )
-            return
-        tmp = os.path.join(self.base, ".manifest.tmp")
-        with open(tmp, "w") as f:
-            f.write(body)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._manifest_path())
+        else:
+            tmp = os.path.join(self.base, ".manifest.tmp")
+            with open(tmp, "w") as f:
+                f.write(body)
+                f.flush()
+                os.fsync(f.fileno())
+            os.rename(tmp, self._manifest_path())
+        self._manifest, self._loaded = m, True

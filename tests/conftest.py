@@ -8,6 +8,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+# Headroom left outside the driver heap: the JVM's off-heap (metaspace,
+# Arrow and netty buffers), the four Python workers of local[4] and this
+# pytest process.
+_HEADROOM_MB = 4096
+
+
+def _driver_heap_mb() -> int:
+    """Driver heap sized from the host's RAM: 60% of what the headroom
+    leaves, between 2g and 16g. A fixed heap larger than the host (16g on a
+    15 GB machine without swap) lets the JVM grow until the kernel kills
+    it a few modules into the suite."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return 4096
+    return min(16384, max(2048, int((total_kb // 1024 - _HEADROOM_MB) * 0.6)))
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -21,14 +40,10 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # 16g: the suite grew past what 6g (rounds 2-4) and then 12g
-        # (round 6: +9 crawl-heavy tests -> broadcast-build OOM in
-        # test_resume late in the session) holds — a near-full heap turns
-        # TaskMemoryManager page allocation into a retry storm (observed:
-        # full suite 10x slower, then executor death mid test_sources)
-        # long before a clean OOM. The host has 128G; bench sessions use
-        # 48g.
-        .config("spark.driver.memory", "16g")
+        # A near-full heap turns TaskMemoryManager page allocation into a
+        # retry storm long before a clean OOM, so the heap takes most of
+        # the RAM the headroom leaves (_driver_heap_mb).
+        .config("spark.driver.memory", f"{_driver_heap_mb()}m")
         # generous RPC/heartbeat margin: under host contention a paused JVM
         # must not read as a dead one
         .config("spark.network.timeout", "600s")

@@ -301,7 +301,7 @@ def test_identity_election_fast_path_equals_elect(spark):
     under budget, so the whole frontier elects and the remainder is empty.
     Pin that equivalence directly on _elect."""
     from pyspark.sql import functions as F
-    from sitecheck_spark.crawl import CrawlConfig, _elect
+    from sitecheck_spark.crawl import CrawlConfig, _elect, _split_election
 
     rows = [
         (f"https://h{i % 3}.example.org/p/{i}.html", f"h{i % 3}.example.org",
@@ -315,10 +315,74 @@ def test_identity_election_fast_path_equals_elect(spark):
         [("h0.example.org", 50), ("h1.example.org", 99)], "netloc string, budget int")
     cfg = CrawlConfig(budget_per_host=60, salt_buckets=4)
     # n_frontier = 12 <= min_budget = min(60, 50, 99) = 50 -> identity
-    elected, remainder = _elect(frontier, budgets, cfg)
+    elected, remainder = _split_election(_elect(frontier, budgets, cfg))
     want = {tuple(r) for r in rows}
     got = {(r["url"], r["netloc"], r["depth"], r["priority"], r["referrer"],
             r["redirects"], r["verb"], r["post_data"])
            for r in elected.collect()}
     assert got == want
     assert remainder.count() == 0
+
+
+_FRONTIER_DDL = ("url string, netloc string, depth int, priority double, "
+                 "referrer string, redirects int, verb string, post_data string")
+
+
+def _election_case(spark):
+    """A frontier built to stress the election's exactness: priority ties
+    broken by url, GET/POST twins of one url broken by verb and post_data,
+    a Crawl-delay host whose budget drops to floor(4 / 2) = 2, two hosts
+    over budget (so salted phase 1 cuts rows), one host exactly at budget
+    and one under it (the wholesale fast path)."""
+    from sitecheck_spark.crawl import _BUDGET_SCHEMA, _budgets_fn
+
+    rows = []
+    for i in range(9):  # slow.example.org: Crawl-delay 2, over budget 2
+        rows.append((f"https://slow.example.org/p/{i}.html", "slow.example.org",
+                     1, float(i % 2), "", 0, "GET", ""))
+    for i in range(6):  # tie.example.org: equal priority, GET + POST twins
+        url = f"https://tie.example.org/p/{i % 3}.html"
+        verb, data = ("GET", "") if i < 3 else ("POST", f"page={i}")
+        rows.append((url, "tie.example.org", 1, 1.0, "", 0, verb, data))
+    rows.append(("https://tie.example.org/p/0.html", "tie.example.org",
+                 1, 1.0, "", 0, "POST", "page=0"))
+    for i in range(4):  # exact.example.org: exactly at budget 4
+        rows.append((f"https://exact.example.org/{i}.html", "exact.example.org",
+                     2, 2.0, "", 0, "GET", ""))
+    for i in range(2):  # small.example.org: under budget
+        rows.append((f"https://small.example.org/{i}.html", "small.example.org",
+                     3, 0.0, "", 0, "GET", ""))
+    robots = spark.createDataFrame(
+        [("slow.example.org", "User-agent: *\nCrawl-delay: 2\n"),
+         ("tie.example.org", "User-agent: *\nDisallow: /private/\n")],
+        "netloc string, rules string")
+    budgets = robots.mapInPandas(_budgets_fn(4), _BUDGET_SCHEMA)
+    return rows, spark.createDataFrame(rows, _FRONTIER_DDL), budgets
+
+
+def test_election_equals_brute_force_per_host_top_budget(spark):
+    """The one-frame election (win flag, split by filters) elects exactly a
+    brute-force per-host top-B in the contract-v3 total order (priority,
+    url, verb, post_data), and the remainder is exactly the rest."""
+    from sitecheck_spark.crawl import CrawlConfig, _elect, _split_election
+
+    rows, frontier, budgets = _election_case(spark)
+    budget = {r["netloc"]: r["budget"] for r in budgets.collect()}
+    assert budget["slow.example.org"] == 2
+    want_elected = set()
+    for host in {r[1] for r in rows}:
+        group = sorted((r for r in rows if r[1] == host),
+                       key=lambda r: (r[3], r[0], r[6], r[7]))
+        want_elected |= set(group[:budget.get(host, 4)])
+    want_remainder = set(rows) - want_elected
+    assert want_remainder and any(r[1] == "tie.example.org" for r in want_remainder)
+
+    ranked = _elect(frontier, budgets,
+                    CrawlConfig(budget_per_host=4, salt_buckets=3)).persist()
+    elected, remainder = _split_election(ranked)
+    got_elected = [tuple(r) for r in elected.select(*frontier.columns).collect()]
+    got_remainder = [tuple(r) for r in remainder.select(*frontier.columns).collect()]
+    ranked.unpersist()
+    assert len(got_elected) == len(set(got_elected))
+    assert set(got_elected) == want_elected
+    assert sorted(got_remainder) == sorted(want_remainder)

@@ -446,3 +446,46 @@ def test_bucket_layout_guard_rejects_nested_layout(spark):
     with pytest.raises(ValueError, match="no data files at the table root"):
         register_pages_bucketed_table(spark, nested, n_buckets=8,
                                       table="pages_bt_nested")
+
+
+def test_bucket_layout_guard_ignores_writer_bookkeeping_dirs(spark):
+    """An empty bucketed table whose root holds only a stale `_temporary`
+    (or `.spark-staging-*`) dir, left by a crashed write, is still an empty
+    table: the guard skips '_'/'.'-prefixed directories exactly as its
+    data-file sweep skips such files, instead of reporting a nested
+    layout."""
+    import os
+    import tempfile as _tf
+
+    from sitecheck_spark.sources.catalog import register_pages_bucketed_table
+
+    loc = _tf.mkdtemp() + "/pages_bt_stale"
+    os.makedirs(os.path.join(loc, "_temporary", "0"))
+    os.makedirs(os.path.join(loc, ".spark-staging-1"))
+    table = register_pages_bucketed_table(spark, loc, n_buckets=8,
+                                          table="pages_bt_stale")
+    assert table.count() == 0
+
+
+def test_remainder_reads_the_cached_election(spark):
+    """elected and remainder are two filters of ONE persisted election
+    frame: once the cache is built, remainder's executed plan is a scan of
+    it — no Window and no Exchange outside the cached relation, so the
+    frontier write never re-runs the ranking chain."""
+    from sitecheck_spark.crawl import CrawlConfig, _elect, _split_election
+    from sitecheck_spark.plans.checks import executed_node_names
+
+    from test_crawl_golden import _election_case
+
+    _rows, frontier, budgets = _election_case(spark)
+    ranked = _elect(frontier, budgets,
+                    CrawlConfig(budget_per_host=4, salt_buckets=3)).persist()
+    elected, remainder = _split_election(ranked)
+    try:
+        elected.count()  # builds the cache, as the wave chain does
+        remainder.collect()
+        nodes = executed_node_names(remainder)
+    finally:
+        ranked.unpersist()
+    assert "InMemoryTableScan" in nodes, nodes
+    assert not [n for n in nodes if "Window" in n or "Exchange" in n], nodes

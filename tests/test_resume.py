@@ -4,6 +4,7 @@ resumed must produce byte-equal final state to an uninterrupted run."""
 from collections import Counter
 
 import os
+import time
 
 import pytest
 
@@ -249,9 +250,13 @@ def _downgrade_checkpoint_to_pre_v3(spark, ckpt, cfg):
         path = m["waves"]["1"]["lineage"][name]["path"]
         _rewrite(path, df)
         m["waves"]["1"]["lineage"][name]["kind"] = "full"
-    # pre-v3 manifests carried no identity-config keys
+    # pre-v3 manifests carried no identity-config keys and no lineage
+    # schemas
     for key in ("n_shards", "filter_kind"):
         m["config"].pop(key, None)
+    for wave in m["waves"].values():
+        for ent in wave["lineage"].values():
+            ent.pop("schema", None)
     import json as _json
 
     with open(os.path.join(ckpt, "manifest.json"), "w") as f:
@@ -364,7 +369,97 @@ def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
     shutil.copy(manifest, ckpt_dir / ".manifest.tmp")
     manifest.unlink()
     assert WaveCatalog(ckpt, spark).last_committed_wave() == 1
+    # a read never writes the store (a reader in a live commit's window
+    # must not race the writer's rename): the tmp stays where it is
+    assert not manifest.exists() and (ckpt_dir / ".manifest.tmp").exists()
+    # the writer heals it: a resumed crawl (here with no wave left to run)
+    # renames the recovered tmp into place
+    crawl(spark, pages, seeds, _cfg(max_waves=2, checkpoint_dir=ckpt)).release()
+    assert manifest.exists() and not (ckpt_dir / ".manifest.tmp").exists()
+    assert json.loads(manifest.read_text())["committed_wave"] == 1
 
     # a TORN tmp (mid-write crash) must not be trusted
+    manifest.unlink()
     (ckpt_dir / ".manifest.tmp").write_text('{"committed_wave": 1, "wav')
     assert WaveCatalog(ckpt, spark).read_manifest() is None
+
+    # nor a tmp that parses but is not a manifest (foreign JSON)
+    for foreign in ('{"job": "other", "status": "ok"}', '{"committed_wave": 1}',
+                    "[1, 2, 3]"):
+        (ckpt_dir / ".manifest.tmp").write_text(foreign)
+        assert WaveCatalog(ckpt, spark).read_manifest() is None
+        assert not manifest.exists()
+
+
+@pytest.mark.parametrize("kw", [
+    dict(max_waves=3),
+    # exact seen path, compaction at wave 2: the resume reads a seen chain
+    # of a compaction (written from parquet read back) plus a delta
+    # (written from the wave's fresh rows) — one recorded schema for both
+    dict(max_waves=4, use_bloom=False, seen_compact_every=2),
+], ids=["bloom", "exact-compacting"])
+def test_frontier_counts_and_resume_reads_launch_no_jobs(spark, pages,
+                                                         tmp_path, kw):
+    """The next frontier's size is an observed row count on its write, not
+    a count job: every wave's manifest n_frontier_next must equal the row
+    count of that wave's committed frontier table. And a resume reads its
+    state lazily, with the schemas recorded in the lineage: crawl() on a
+    catalog that needs no further wave — set-up and result assembly only —
+    launches no job at all (no schema inference, no checkpoint, no count)."""
+    import uuid
+
+    seeds = make_seeds_pdf().url.tolist()
+    ckpt = str(tmp_path / "ckpt_counts")
+    crawl(spark, pages, seeds, _cfg(checkpoint_dir=ckpt, **kw)).release()
+    m = WaveCatalog(ckpt).read_manifest()
+    last = kw["max_waves"] - 1
+    assert m["committed_wave"] == last
+    counts = []
+    for k in map(str, range(last + 1)):
+        wave = m["waves"][k]
+        rows = spark.read.parquet(wave["lineage"]["frontier"]["path"]).count()
+        assert wave["metrics"]["n_frontier_next"] == rows, k
+        counts.append(rows)
+    assert all(n > 0 for n in counts)
+
+    sc = spark.sparkContext
+    group = f"resume-setup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "crawl() on a resumed catalog")
+    try:
+        res = crawl(spark, pages, seeds, _cfg(checkpoint_dir=ckpt, **kw))
+        sc.parallelize([0], 1).count()  # sentinel: the group's one own job
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    for _ in range(100):  # job events reach the tracker asynchronously
+        jobs = tracker.getJobIdsForGroup(group)
+        if jobs:
+            break
+        time.sleep(0.1)
+    assert len(jobs) == 1, [tracker.getJobInfo(j) for j in jobs]
+    assert res.waves == kw["max_waves"]
+    res.release()
+
+
+def test_lineage_schema_is_the_parquet_read_schema(spark, tmp_path):
+    """The schema a commit records is the one a parquet read of the table
+    reports (every field, element and value nullable), whatever the
+    nullability of the frame written. Otherwise a read_state chain mixing a
+    table written from fresh rows with one written from read-back rows
+    records two schemas, and the read falls back to schema inference."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    cat = WaveCatalog(str(tmp_path / "ckpt_schema"))
+    fresh = spark.range(3).withColumn("xs", F.array("id"))  # non-nullable
+    cat.commit_wave(0, {"t": fresh}, {})
+    ent = cat.manifest["waves"]["0"]["lineage"]["t"]
+    read_back = spark.read.parquet(ent["path"])
+    assert StructType.fromJson(json.loads(ent["schema"])) == read_back.schema
+    cat.commit_wave(1, {"t": read_back}, {}, state_kinds={"t": "delta"})
+    assert cat.manifest["waves"]["1"]["lineage"]["t"]["schema"] == ent["schema"]
+    assert cat.read_state(spark, "t", 1).count() == 6
