@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: BFS crawl (politeness + robots + bloom seen-set + checkers)
+    """Flagship: BFS crawl (politeness + robots + exact seen-set + checkers)
     over a deterministic synthetic page corpus; returns the fetch log."""
     from sitecheck_spark.crawl import CrawlConfig, crawl
     from sitecheck_spark.sources.corpus import (

@@ -43,7 +43,6 @@ def main() -> None:
     p.add_argument("--max-waves", type=int, default=50)
     p.add_argument("--max-depth", type=int, default=10)
     p.add_argument("--n-shards", type=int, default=256)
-    p.add_argument("--filter-kind", choices=["bloom", "cuckoo"], default="bloom")
     p.add_argument("--no-broadcast-fetch", action="store_true",
                    help="use a shuffle join for the fetch (bucketed pages tables)")
     args = p.parse_args()
@@ -66,7 +65,6 @@ def main() -> None:
         max_waves=args.max_waves,
         max_depth=args.max_depth,
         n_shards=args.n_shards,
-        filter_kind=args.filter_kind,
         pages_buckets=n_buckets,
         checkpoint_dir=args.checkpoint_dir,
         broadcast_fetch=not args.no_broadcast_fetch,

@@ -8,8 +8,8 @@ as iterative DataFrame programs over a Common-Crawl-style `pages` table
 
 - the crawl frontier is a table; "fetching" is a join against the corpus
 - link extraction + checker modules run in one vectorized mapInPandas pass
-- the URL-seen set is partitioned Bloom + cuckoo filter shards keyed by
-  xxhash64(canonical_url)
+- "already seen" is an exact anti-join against the seen table on request
+  identity (verb, url, post data)
 - politeness is a per-netloc windowed budget with robots.txt gating
 - host skew is defused with salted repartitioning on netloc
 - every wave commits an atomic checkpoint (resume-exactly semantics)

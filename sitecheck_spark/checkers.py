@@ -346,17 +346,32 @@ def findings_pass(parsed: DataFrame, emit_tokens: bool = False) -> DataFrame:
     )
 
 
+# Most rows a spelling dictionary may have: its words become one literal in
+# every wave's findings plan, and the plan text grows with it.
+DICT_WORDS_CAP = 100_000
+
+
+def collect_dictionary(dictionary: DataFrame) -> list[str]:
+    """The sorted distinct words of `dictionary`'s `word` column, collected
+    to the driver. Collects at most DICT_WORDS_CAP + 1 rows and raises if
+    the dictionary has more than DICT_WORDS_CAP."""
+    rows = dictionary.select("word").limit(DICT_WORDS_CAP + 1).collect()
+    if len(rows) > DICT_WORDS_CAP:
+        raise ValueError(
+            f"spelling dictionary has {dictionary.count()} rows, over the "
+            f"cap of {DICT_WORDS_CAP} rows for an in-plan word list")
+    return sorted({r["word"] for r in rows})
+
+
 def wave_findings_pass(
     parsed: DataFrame, max_redirects: int,
     dictionary: DataFrame | list[str] | None = None, checkers: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> DataFrame:
     """ALL of a crawl wave's per-page findings from ONE scan of the parsed
     table: broken_link (status=404 rows), over-cap redirect chains, and —
     when `checkers` — C2/C3/C5 (+ C4 spelling when a dictionary is given).
-    Returns (findings(module, url, wave, detail, referrer), handle);
-    `handle` (non-None only on the dictionary path) is the slim fused cache
-    to unpersist once the findings are materialized. Robots findings are
-    not built here — they read the gated frontier, not parsed pages.
+    Returns findings(module, url, wave, detail, referrer). Robots findings
+    are not built here — they read the gated frontier, not parsed pages.
 
     Why one scan: every filter branch over the parsed cache fetches the
     FULL cached batches from the block manager regardless of column
@@ -372,7 +387,7 @@ def wave_findings_pass(
     of the r7 profile's ckpt_findings stage group, 240 s CPU/run at the
     120k-page bench); now ~2 rows/page survive and no anti-join runs.
     Collecting the dictionary is the same smallness assumption its
-    broadcast already made.
+    broadcast already made, enforced by collect_dictionary's cap.
 
     r7: the spelling CONTEXT is also computed in-row (_checker_structs
     inline_context): the unknown token and its source text share a row, so
@@ -380,15 +395,14 @@ def wave_findings_pass(
     SECOND scan of the parsed cache per wave, plus a persisted in-band
     token table — was pure plumbing. The whole wave findings job is now
     ONE scan of the parsed cache with zero exchanges before the
-    checkpoint, and the returned handle is always None."""
+    checkpoint."""
     emit_tokens = checkers and dictionary is not None
     dict_words: list[str] | None = None
     if emit_tokens:
         if isinstance(dictionary, (list, tuple)):
             dict_words = sorted(set(dictionary))
         else:
-            dict_words = sorted({r["word"] for r in
-                                 dictionary.select("word").collect()})
+            dict_words = collect_dictionary(dictionary)
     broken = F.array_compact(F.array(
         F.when(
             F.col("status") == 404,
@@ -431,7 +445,7 @@ def wave_findings_pass(
             F.col("f.referrer").alias("referrer"),
         )
     )
-    return fused, None
+    return fused
 
 
 def findings_with_spelling(

@@ -28,8 +28,8 @@ become POST requests crawled independently of their GET twins.
       6. cand      = explode(outlinks) ∪ meta-refresh targets (hop-capped
                      redirect chains) -> ext/domain/depth filters ->
                      groupBy(url).min(struct(depth, referrer, redirects))
-      7. new       = bloom-shard probe (cogroup applyInPandas) -> exact
-                     anti-join fallback only for bloom-positives (A1/J2)
+      7. new       = exact left_anti join of the candidates against the
+                     seen union on request identity (verb, url, post_data)
       8. gate      = robots verdicts on the *new* urls only (R1) — each url
                      is gated exactly once in its lifetime; gated is
                      checkpointed
@@ -50,11 +50,10 @@ checkpoints (budgets, rules, parsed, gated) rather than caches, so no plan
 nests another cached plan: Spark renders a cached plan into the text of
 every query over it, twice under AQE, and that text is rebuilt on every
 adaptive re-plan. The election alone stays a cache, filled by the parse
-job. The seen set is sharded bloom bits probed
-via cogroup — the exact anti-join only ever sees bloom-positive candidates
-(true dups + ~1% false positives), so the expensive shuffle join shrinks by
-~the novelty rate. Shard count and bloom sizing are config knobs sized so
-one shard's bits fit comfortably in one task (default 2^17 bits = 16 KiB).
+job. "Already seen" has one answer: the exact anti-join against the seen
+table. The seen table still shuffles on its join keys every wave; keeping it
+hash-partitioned on its identity `shard` column across waves, so that only
+the candidates shuffle, is the open scale step.
 """
 
 from __future__ import annotations
@@ -72,11 +71,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sitecheck_spark import robots as robots_mod
-from sitecheck_spark.checkers import wave_findings_pass
+from sitecheck_spark.checkers import collect_dictionary, wave_findings_pass
 from sitecheck_spark.extract import PARSED_SCHEMA, parse_pages_batch
 from sitecheck_spark.functions.urls import canonicalize, netloc_of
 from sitecheck_spark.golden import IGNORED_EXTENSIONS
-from sitecheck_spark.seen import BloomShard, CuckooShard
 from sitecheck_spark.sources import catalog as catalog_mod
 from sitecheck_spark.sources.catalog import WaveCatalog, ckpt_label, run_concurrently
 
@@ -90,13 +88,8 @@ class CrawlConfig:
     max_depth: int = 10
     max_redirects: int = 5             # meta-refresh chain hop cap
     allowed_netlocs: list[str] | None = None  # default: seed netlocs
-    n_shards: int = 32
+    n_shards: int = 32                 # modulus of seen's identity `shard` column
     salt_buckets: int = 8
-    use_bloom: bool = True
-    filter_kind: str = "bloom"         # 'bloom' | 'cuckoo' (cuckoo: deletable)
-    bloom_bits: int = 1 << 17          # per shard; multiple of 8
-    bloom_hashes: int = 7
-    cuckoo_buckets: int = 1 << 13      # per shard; power of two, 4 slots each
     checkpoint_dir: str | None = None  # enables resumable mode (catalog.py)
     # Resumable mode commits `seen` as per-wave DELTAS (this wave's new
     # requests) with a full compaction snapshot every k waves: per-wave
@@ -152,7 +145,6 @@ class CrawlResult:
     seen: DataFrame          # (url, url_hash, shard)
     waves: int = 0
     metrics: list[dict] = field(default_factory=list)
-    shards: DataFrame | None = None
     _cached: list = field(default_factory=list, repr=False)
 
     def release(self) -> None:
@@ -251,141 +243,6 @@ def _compile_rules_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataF
         yield pd.DataFrame(rows, columns=["netloc", "seq", "prefix", "allow"])
 
 
-def _robots_gate_fn(passthrough_cols: list[str]):
-    """mapInPandas over (…cols…, rules) -> (…cols…, robots_allowed)."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            verdicts = []
-            for url, netloc, rules in zip(pdf["url"], pdf["netloc"], pdf["rules"]):
-                if rules is None or (isinstance(rules, float) and pd.isna(rules)):
-                    verdicts.append(True)
-                    continue
-                if netloc not in cache:
-                    try:
-                        cache[netloc] = robots_mod._build_parser(rules)
-                    except Exception:
-                        cache[netloc] = None
-                rp = cache[netloc]
-                try:
-                    verdicts.append(rp.can_fetch(robots_mod.USER_AGENT, url) if rp else True)
-                except Exception:
-                    verdicts.append(True)
-            out = pdf[passthrough_cols].copy()
-            out["robots_allowed"] = verdicts
-            yield out
-
-    return fn
-
-
-# --- bloom shard cogroup functions (module-level: must be picklable) -------
-
-def _new_filter(cfg: "CrawlConfig"):
-    if cfg.filter_kind == "cuckoo":
-        return CuckooShard(cfg.cuckoo_buckets)
-    return BloomShard(cfg.bloom_bits, cfg.bloom_hashes)
-
-
-def _filter_from_bytes(raw: bytes):
-    return CuckooShard.from_bytes(raw) if raw[:4] == CuckooShard.HEADER \
-        else BloomShard.from_bytes(raw)
-
-
-_CAND_COLS = ["url", "netloc", "depth", "priority", "referrer", "redirects",
-              "verb", "post_data", "url_hash", "shard"]
-_FUSED_SCHEMA = (
-    "kind int, url string, netloc string, depth int, priority double, "
-    "referrer string, redirects int, verb string, post_data string, "
-    "url_hash long, shard int, "
-    "maybe_seen boolean, bits binary, n_items long, _path string"
-)
-
-
-def _make_probe_merge_fn(cfg: "CrawlConfig"):
-    """ONE cogroup per wave doing both bloom probe and bloom update.
-
-    Sound because the seen set grows by exactly this wave's candidate set:
-    every candidate is marked seen this wave (enqueued or robots-blocked).
-    Probing happens before adding, so same-wave flags are unaffected. Only
-    filter-NEGATIVE hashes are inserted: re-adding a positive is a no-op
-    for bloom but NOT for cuckoo (duplicate fingerprints eat slots until
-    premature saturation — cycle links recur every wave), and skipping a
-    false-positive new URL stays exact because probe-positives always fall
-    through to the exact anti-join.
-    """
-
-    def fn(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(shard_pdf):
-            bloom = _filter_from_bytes(bytes(shard_pdf["bits"].iloc[0]))
-            n_items = int(shard_pdf["n_items"].iloc[0])
-        else:
-            bloom = _new_filter(cfg)
-            n_items = 0
-        parts = []
-        if len(cand_pdf):
-            hashes = cand_pdf["url_hash"].to_numpy()
-            out = cand_pdf[_CAND_COLS].copy()
-            maybe_seen = bloom.contains(hashes)
-            out["kind"] = 0
-            out["maybe_seen"] = maybe_seen
-            fresh = hashes[~maybe_seen]
-            if isinstance(bloom, CuckooShard):
-                bloom.insert(fresh)  # flips to saturated (all-True) on overflow
-            else:
-                bloom.add(fresh)
-            n_items += int(len(fresh))
-            out["bits"] = None
-            out["n_items"] = 0
-            # robots match string computed HERE: the candidate rows already
-            # cross the Python boundary for the probe, so the downstream
-            # robots gate reuses this column instead of running its own
-            # mapInPandas pass (one fewer Arrow round trip per wave).
-            out["_path"] = [robots_mod.match_path(u) for u in out["url"]]
-            parts.append(out)
-        parts.append(
-            pd.DataFrame(
-                {
-                    "url": [""], "netloc": [""], "depth": [0], "priority": [0.0],
-                    "referrer": [""], "redirects": [0], "verb": [""],
-                    "post_data": [""], "url_hash": [0],
-                    "shard": [int(key[0])], "kind": [1], "maybe_seen": [False],
-                    "bits": [bloom.to_bytes()], "n_items": [n_items],
-                    "_path": [""],
-                }
-            )
-        )
-        cols = ["kind"] + _CAND_COLS + ["maybe_seen", "bits", "n_items", "_path"]
-        return pd.concat(parts, ignore_index=True)[cols]
-
-    return fn
-
-
-def _make_merge_fn(cfg: "CrawlConfig"):
-    def merge(key: tuple, new_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(shard_pdf):
-            bloom = _filter_from_bytes(bytes(shard_pdf["bits"].iloc[0]))
-            n_items = int(shard_pdf["n_items"].iloc[0])
-        else:
-            bloom = _new_filter(cfg)
-            n_items = 0
-        if len(new_pdf):
-            hashes = new_pdf["url_hash"].to_numpy()
-            if isinstance(bloom, CuckooShard):
-                bloom.insert(hashes)
-            else:
-                bloom.add(hashes)
-            n_items += len(new_pdf)
-        return pd.DataFrame(
-            {"shard": [int(key[0])], "bits": [bloom.to_bytes()], "n_items": [n_items]}
-        )
-
-    return merge
-
-
-_SHARDS_SCHEMA = "shard int, bits binary, n_items long"
-
-
 def _with_identity(df: DataFrame, n_shards: int) -> DataFrame:
     """Request identity (CRAWL CONTRACT v3): the hashed (verb, url,
     post_data) triple — the reference dedups requests, not urls (SURVEY.md
@@ -399,6 +256,23 @@ def _with_identity(df: DataFrame, n_shards: int) -> DataFrame:
     return df.withColumn(
         "url_hash", F.xxhash64("verb", "url", "post_data")
     ).withColumn("shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
+
+
+def _require_contract_v3(base: str, frontier: DataFrame, seen: DataFrame) -> None:
+    """Fail closed on a checkpoint written before CRAWL CONTRACT v3: its
+    frontier lacks the redirect counter or the request identity columns, or
+    its seen set lacks the identity (and hashes urls alone). Resuming it
+    would re-fetch requests it already crawled."""
+    missing = [f"{name}.{col}"
+               for name, df, cols in (
+                   ("frontier", frontier, ("redirects", "verb", "post_data")),
+                   ("seen", seen, ("verb", "post_data")))
+               for col in cols if col not in df.columns]
+    if missing:
+        raise ValueError(
+            f"checkpoint {base} predates crawl contract v3 (missing "
+            f"{', '.join(missing)}): it cannot be resumed; start the crawl "
+            f"in a new checkpoint_dir")
 
 
 def crawl(
@@ -489,11 +363,10 @@ def crawl(
 
     # Collect the spelling dictionary ONCE for all waves: checkers fold it
     # into the fused findings scan as an array_except literal (checkers.py
-    # _checker_structs) — same smallness assumption its broadcast made.
+    # _checker_structs); over checkers.DICT_WORDS_CAP rows it raises.
     dict_words = None
     if dictionary is not None and cfg.run_checkers:
-        dict_words = sorted({r["word"] for r in
-                             dictionary.select("word").collect()})
+        dict_words = collect_dictionary(dictionary)
 
     frontier_cols = ["url", "netloc", "depth", "priority", "referrer",
                      "redirects", "verb", "post_data"]
@@ -522,8 +395,6 @@ def crawl(
         catalog.heal_manifest()  # this crawl is the catalog's one writer
 
     pending_findings: list[DataFrame] = []  # pre-wave-0 (seed gating) findings
-    shards: DataFrame | None = None
-    force_seen_full = False  # set when resume migrated the seen schema
 
     if resumed_from is not None:
         # Resume-exactly: the last committed wave's parquet IS the state.
@@ -531,47 +402,8 @@ def crawl(
         # checkpoint job, no schema-inference job), and the frontier size
         # comes from the manifest, not a count job.
         frontier = catalog.read_table(spark, "frontier", resumed_from)
-        if "redirects" not in frontier.columns:  # pre-contract-v2 checkpoint
-            frontier = frontier.withColumn("redirects", F.lit(0))
-        if "verb" not in frontier.columns:  # pre-contract-v3 checkpoint
-            frontier = frontier.withColumn("verb", F.lit("GET")).withColumn(
-                "post_data", F.lit("")
-            )
         seen = catalog.read_state(spark, "seen", resumed_from)
-        ck_cfg = catalog.manifest.get("config", {})
-        # Shard bits are only reusable if they were built under the SAME
-        # identity hash, shard modulus, and filter kind as this run probes
-        # with; otherwise probe false-negatives skip the exact anti-join
-        # and silently re-enqueue crawled urls. Old manifests lack the
-        # keys -> assume compatible (pre-guard behavior).
-        rebuild_shards = (
-            ck_cfg.get("n_shards", cfg.n_shards) != cfg.n_shards
-            or ck_cfg.get("filter_kind", cfg.filter_kind) != cfg.filter_kind
-            or not catalog.has_table("shards", resumed_from)
-        )
-        if "verb" not in seen.columns:
-            # pre-contract-v3 checkpoint: the stored url_hash/shard (and
-            # the bloom bits built from them) hash the URL ALONE; v3
-            # identity is xxhash64(verb, url, post_data). Migrating by
-            # defaulting verb/post_data but keeping stale hashes would
-            # false-negative every bloom probe — drop and recompute the
-            # identity, then rebuild the shards from the exact seen set.
-            seen = _with_identity(seen.drop("url_hash", "shard"), cfg.n_shards)
-            rebuild_shards = True
-            # The recomputed identity exists only in memory; the on-disk
-            # base snapshot is still pre-v3 (url-only schema). If this run
-            # committed only deltas, a SECOND resume would read_state a
-            # mixed-schema base+delta chain (parquet multi-path read, no
-            # mergeSchema) — base rows get null verb/post_data or deltas
-            # lose POST identity, and crawled requests silently re-fetch.
-            # Force the first commit of the resumed run to be a full v3
-            # snapshot so the on-disk chain is schema-uniform again.
-            force_seen_full = True
-        if cfg.use_bloom:
-            if rebuild_shards:
-                shards = _merge_shards(spark, seen, None, cfg)
-            else:
-                shards = catalog.read_table(spark, "shards", resumed_from)
+        _require_contract_v3(cfg.checkpoint_dir, frontier, seen)
         n_frontier = catalog.manifest["waves"][str(resumed_from)]["metrics"][
             "n_frontier_next"]
         wave = resumed_from + 1
@@ -594,8 +426,6 @@ def crawl(
         seen = _with_identity(
             seeds_df.select("url", "verb", "post_data"), cfg.n_shards
         ).localCheckpoint(eager=True)
-        if cfg.use_bloom:
-            shards = _merge_shards(spark, seen, None, cfg)
         wave = 0
 
     # `seen` is maintained as a UNION of materialized leaves: one base
@@ -626,7 +456,7 @@ def crawl(
                         max(-(-n_frontier // _WAVE_ROWS_PER_PARTITION),
                             min(8, _sess_parts)))),
             )
-            prev_frontier, prev_shards = frontier, shards
+            prev_frontier = frontier
             budgets, rules, comp_map = wave_tables()
             wave_logs: list[DataFrame] = []
             wave_findings: list[DataFrame] = list(pending_findings)
@@ -756,7 +586,7 @@ def crawl(
             # from ONE scan of the parsed cache (every separate filter branch
             # would fetch the full cached batches again; robots findings join
             # the gated frontier below instead)
-            page_findings, checker_handle = wave_findings_pass(
+            page_findings = wave_findings_pass(
                 parsed, cfg.max_redirects, dict_words,
                 checkers=cfg.run_checkers,
             )
@@ -842,15 +672,10 @@ def crawl(
             )
             cand = _with_identity(cand, cfg.n_shards)
 
-            fused_handle = None
-            if cfg.use_bloom and shards is not None:
-                new, new_shards, fused_handle = _probe_and_absorb(cand, seen, shards, cfg)
-            else:
-                new = cand.join(
-                    seen.select("verb", "url", "post_data"),
-                    ["verb", "url", "post_data"], "left_anti",
-                )
-                new_shards = None
+            new = cand.join(
+                seen.select("verb", "url", "post_data"),
+                ["verb", "url", "post_data"], "left_anti",
+            )
 
             gated = _labelled(
                 "wave_probe_gate" if cfg.phase_labels else "wave_chain",
@@ -874,16 +699,13 @@ def crawl(
                 remainder.select(*frontier_cols).unionByName(new_frontier_rows)
             )
             new_seen = gated.select("url", "verb", "post_data", "url_hash", "shard")
-            compact = force_seen_full or wave % cfg.seen_compact_every == 0
+            compact = wave % cfg.seen_compact_every == 0
             # seen materializes as this wave's DELTA; the full union only on
-            # compaction waves (see seen_parts above). Frontier and shards
-            # stay full-state (frontier is the small active set, shards a
-            # fixed count of fixed-size filters). Wave 0 lands on the
+            # compaction waves (see seen_parts above). The frontier stays
+            # full-state (it is the small active set). Wave 0 lands on the
             # compaction branch, so a delta chain always has a base.
             state = {"frontier": frontier_next,
                      "seen": seen.unionByName(new_seen) if compact else new_seen}
-            if new_shards is not None:
-                state["shards"] = new_shards
             deltas = {"fetch_log": _union_all(wave_logs, empty_log),
                       "findings": _union_all(wave_findings, empty_findings)}
 
@@ -897,8 +719,7 @@ def crawl(
                 metrics=wave_metrics,
                 config={"budget_per_host": cfg.budget_per_host,
                         "max_depth": cfg.max_depth, "seeds": seed_canon,
-                        "n_shards": cfg.n_shards,
-                        "filter_kind": cfg.filter_kind},
+                        "n_shards": cfg.n_shards},
             )
             t_state = time.time() - t0
             frontier = out["frontier"]
@@ -910,7 +731,6 @@ def crawl(
             else:
                 seen_parts.append(out["seen"])
                 seen = seen.unionByName(out["seen"])
-            shards = out.get("shards", shards)
             if catalog is None:
                 fetch_logs.append(out["fetch_log"])
                 findings.append(out["findings"])
@@ -923,18 +743,11 @@ def crawl(
             # — they compose the live union until a compaction wave collapses
             # them, handled above.)
             prev_frontier.unpersist()
-            if prev_shards is not None and shards is not prev_shards:
-                prev_shards.unpersist()
             ranked.unpersist()
-            if fused_handle is not None:
-                fused_handle.unpersist()
-            if checker_handle is not None:
-                checker_handle.unpersist()
             if cfg.verbose:
                 print(f"[crawl] wave={wave} next_frontier={n_frontier} "
                       f"wall={time.time()-t_wave:.2f}s "
                       f"(chain={t_chain:.1f} state={t_state:.1f})", flush=True)
-            force_seen_full = False  # migration snapshot committed (first wave)
             end_wave = wave + 1
             wave += 1
     finally:
@@ -952,12 +765,9 @@ def crawl(
     else:
         fetch_log = _union_all(fetch_logs, empty_log)
         findings_df = _union_all(findings, empty_findings)
-    cached = [*fetch_logs, *findings, *seen_parts, frontier]
-    if shards is not None:
-        cached.append(shards)
     return CrawlResult(
         fetch_log=fetch_log, findings=findings_df, seen=seen, waves=end_wave,
-        metrics=metrics, shards=shards, _cached=cached,
+        metrics=metrics, _cached=[*fetch_logs, *findings, *seen_parts, frontier],
     )
 
 
@@ -1189,10 +999,7 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
     by request identity and the seeds are a sorted set.
 
     Accepts either the long form (aggregated here) or a pre-aggregated
-    `_rules` DataFrame (the crawl loop persists the aggregate once). A df
-    that ALREADY carries `_path` (the crawl's probe cogroup computes it
-    in-band, _make_probe_merge_fn) skips the mapInPandas pass entirely —
-    the gate is then join + row-local array election, no Python at all."""
+    `_rules` DataFrame (the crawl loop checkpoints the aggregate once)."""
     if "_rules" not in rules.columns:
         rules = _rules_array(rules)
     first_hit = F.get(
@@ -1203,14 +1010,11 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
         ),
         0,
     )
-    if "_path" in df.columns:
-        with_path = df
-    else:
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.select(*passthrough).schema
-        ) + ", _path string"
-        with_path = df.mapInPandas(_match_path_fn(list(passthrough)), schema)
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.select(*passthrough).schema
+    ) + ", _path string"
+    with_path = df.mapInPandas(_match_path_fn(list(passthrough)), schema)
     return (
         with_path.join(rules, "netloc", "left")
         .select(
@@ -1218,46 +1022,6 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
             F.coalesce(first_hit["allow"], F.lit(True)).alias("robots_allowed"),
         )
     )
-
-
-def _probe_and_absorb(
-    cand: DataFrame, seen: DataFrame, shards: DataFrame, cfg: CrawlConfig
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """A1 + J2 fused: one cogroup probes the bloom AND absorbs this wave's
-    candidate hashes into it. Returns (new, new_shards, fused_handle);
-    caller unpersists fused_handle once new/new_shards are materialized.
-    The exact anti-join runs only on bloom-positive candidates."""
-    fused = (
-        cand.groupby("shard")
-        .cogroup(shards.select("shard", "bits", "n_items").groupby("shard"))
-        .applyInPandas(_make_probe_merge_fn(cfg), _FUSED_SCHEMA)
-        .persist()
-    )
-    new_shards = fused.filter(F.col("kind") == 1).select("shard", "bits", "n_items")
-    probed = fused.filter(F.col("kind") == 0).select(
-        *_CAND_COLS, "maybe_seen", "_path"
-    )
-    definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(
-        seen.select("verb", "url", "post_data"),
-        ["verb", "url", "post_data"], "left_anti",
-    )
-    return definitely_new.unionByName(confirmed_new), new_shards, fused
-
-
-def _merge_shards(
-    spark: SparkSession, new_seen: DataFrame, shards: DataFrame | None, cfg: CrawlConfig
-) -> DataFrame:
-    if shards is None:
-        shards = spark.createDataFrame([], _SHARDS_SCHEMA)
-    merged = (
-        new_seen.select("shard", "url_hash")
-        .groupby("shard")
-        .cogroup(shards.groupby("shard"))
-        .applyInPandas(_make_merge_fn(cfg), _SHARDS_SCHEMA)
-    )
-    return merged.localCheckpoint(eager=True)
 
 
 def resolve_redirect_chains(edges: DataFrame, max_hops: int = 4) -> DataFrame:
@@ -1292,69 +1056,3 @@ def resolve_redirect_chains(edges: DataFrame, max_hops: int = 4) -> DataFrame:
             F.coalesce("_more", F.lit(False)).alias("capped"),
         )
     )
-
-
-def _make_rebuild_fn(cfg: "CrawlConfig"):
-    """Rebuild one shard's filter from scratch out of its exact seen hashes."""
-
-    def fn(key, seen_pdf: pd.DataFrame, _marker_pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = _new_filter(cfg)
-        n_items = 0
-        if len(seen_pdf):
-            hashes = seen_pdf["url_hash"].to_numpy()
-            if isinstance(filt, CuckooShard):
-                filt.insert(hashes)
-            else:
-                filt.add(hashes)
-            n_items = int(len(seen_pdf))
-        return pd.DataFrame(
-            {"shard": [int(key[0])], "bits": [filt.to_bytes()], "n_items": [n_items]}
-        )
-
-    return fn
-
-
-def forget_urls(
-    seen: DataFrame, shards: DataFrame | None, urls: list[str], cfg: CrawlConfig
-) -> tuple[DataFrame, DataFrame | None]:
-    """Re-crawl support: remove urls from the exact seen set and REBUILD the
-    affected probabilistic shards from the remaining exact seen hashes, so a
-    subsequent crawl fetches them again. Rebuilding (vs cuckoo delete) is the
-    only sound path: a 16-bit cuckoo fingerprint collision would let delete()
-    remove a copy belonging to a *different* retained URL, creating a false
-    negative that skips the exact anti-join and duplicates that URL in seen.
-    Rebuild also makes bloom shards (which cannot delete) forgettable.
-    Unaffected shards pass through untouched. Returns (seen, shards)."""
-    spark = seen.sparkSession
-    canon = sorted({u for u in (canonicalize(u) for u in urls) if u})
-    to_del = spark.createDataFrame([(u,) for u in canon], "url string")
-    new_seen = seen.join(to_del, "url", "left_anti")
-    new_seen = new_seen.localCheckpoint(eager=True)
-    if shards is None:
-        return new_seen, None
-    # affected shards come from the seen rows themselves: forgetting a url
-    # forgets EVERY request identity of it (GET and any POSTs), and those
-    # identities hash to different shards (contract v3). Collected to a
-    # literal frame — it is tiny (<= n_shards rows) and deriving it lazily
-    # from `seen` makes every later join with new_seen an ambiguous
-    # self-join (both sides would carry seen's own `shard` attribute).
-    # Collected only on the shard path: the bloom-disabled caller returns
-    # above without paying this job.
-    affected_ids = sorted(
-        r["shard"]
-        for r in seen.join(to_del, "url", "left_semi")
-        .select("shard").distinct().collect()
-    )
-    affected = spark.createDataFrame([(s,) for s in affected_ids], "shard int")
-    kept = shards.join(affected, "shard", "left_anti")
-    rebuilt = (
-        new_seen.join(affected, "shard", "left_semi")
-        .select("shard", "url_hash")
-        .groupby("shard")
-        # cogroup against the affected-shard markers so a shard whose entire
-        # seen set was forgotten still re-emits an (empty) filter row
-        .cogroup(affected.groupby("shard"))
-        .applyInPandas(_make_rebuild_fn(cfg), _SHARDS_SCHEMA)
-    )
-    new_shards = kept.unionByName(rebuilt).localCheckpoint(eager=True)
-    return new_seen, new_shards

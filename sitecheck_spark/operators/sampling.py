@@ -33,10 +33,11 @@ def knuth_bucket(key: Column, buckets: int = 100) -> Column:
     diverging from the documented mod-2^32 contract. decimal(38,0) holds
     the full product for any bigint key, so h = (key * KNUTH) mod 2^32
     is exact over the whole key range; for in-range keys the value is
-    bit-identical to the old bigint arithmetic (oracle-checked)."""
+    bit-identical to the old bigint arithmetic (oracle-checked). The
+    result is cast back to bigint, losslessly: it lies in [0, buckets)."""
     return F.pmod(
         (key.cast("decimal(38,0)") * F.lit(KNUTH)) % F.lit(MOD), F.lit(buckets)
-    )
+    ).cast("bigint")
 
 
 def stratified_sample(

@@ -86,21 +86,29 @@ def has_whole_stage_codegen(df: DataFrame) -> bool:
     return "WholeStageCodegen" in formatted_plan(df)
 
 
-def executed_node_names(df: DataFrame) -> list[str]:
-    """Node names of `df`'s executed physical plan (run an action on `df`
-    first). Walks through adaptive-execution wrappers and query stages, but
-    not into cached relations: an InMemoryTableScan is a leaf here, since
-    the plan that built the cache is not re-run by this one."""
-    names = []
+def executed_nodes(df: DataFrame, into_caches: bool = False) -> list:
+    """The JVM nodes of `df`'s executed physical plan (run an action on `df`
+    first). Walks through adaptive-execution wrappers and query stages. A
+    cached relation's InMemoryTableScan is a leaf, since the plan that
+    built the cache is not re-run by this one, unless `into_caches`: then
+    the walk goes on into the plan that built the cache."""
+    nodes = []
     todo = [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
-        names.append(node.nodeName())
+        nodes.append(node)
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
             todo.append(node.executedPlan())
         elif cls.endswith("QueryStageExec"):
             todo.append(node.plan())
+        elif cls == "InMemoryTableScanExec" and into_caches:
+            todo.append(node.relation().cachedPlan())
         children = node.children()
         todo.extend(children.apply(i) for i in range(children.size()))
-    return names
+    return nodes
+
+
+def executed_node_names(df: DataFrame) -> list[str]:
+    """Node names of executed_nodes(df)."""
+    return [node.nodeName() for node in executed_nodes(df)]

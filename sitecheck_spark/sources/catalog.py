@@ -1,11 +1,12 @@
 """Wave-checkpoint catalog: atomic commits + resume-exactly (SURVEY.md §3.2 S4/R3).
 
 The reference suspends/resumes by pickling its queue + seen set (SURVEY.md
-§1.1). Here every crawl wave commits its post-wave state — frontier and
-bloom shards full-state (small), `seen` as a per-wave DELTA with a periodic
-full compaction snapshot (the cumulative seen is the one state table that
-grows without bound; see commit_wave/read_state) — plus this wave's
-fetch-log/findings deltas and metrics, with lineage recorded per table.
+§1.1). Here every crawl wave commits its post-wave state — the frontier
+full-state (it is the small active set), `seen` as a per-wave DELTA with a
+periodic full compaction snapshot (the cumulative seen is the one state
+table that grows without bound; see commit_wave/read_state) — plus this
+wave's fetch-log/findings deltas and metrics, with lineage recorded per
+table.
 
 Commit protocol (works on any rename-atomic filesystem; the seam where an
 Iceberg catalog drops in — snapshot commit replaces the manifest rename, and
@@ -324,7 +325,7 @@ def read_pages_table(spark: SparkSession, table: str = PAGES_TABLE) -> DataFrame
     return spark.table(table)
 
 
-STATE_TABLES = ("frontier", "seen", "shards")
+STATE_TABLES = ("frontier", "seen")
 DELTA_TABLES = ("fetch_log", "findings")
 
 
@@ -566,16 +567,13 @@ class WaveCatalog:
         ent = self._lineage(name, wave)
         return self._read_parquet(spark, [self._table_dir(name, wave)], [ent])
 
-    def has_table(self, name: str, wave: int) -> bool:
-        return self._lineage(name, wave) is not None
-
     def read_state(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         """Full state of `name` as of `wave`: the newest kind="full" snapshot
         at or before `wave`, unioned with every kind="delta" commit after it
         (delta rows are disjoint by construction, so plain union IS the
-        state). Tables committed full-state every wave — frontier, shards,
-        and every pre-delta-era checkpoint (lineage entries without a
-        "kind") — degrade to a single-path read."""
+        state). Tables committed full-state every wave — the frontier, and
+        every pre-delta-era checkpoint (lineage entries without a "kind") —
+        degrade to a single-path read."""
         entries: list[dict] = []
         for k in range(wave, -1, -1):
             ent = self._lineage(name, k)

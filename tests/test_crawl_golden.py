@@ -162,18 +162,6 @@ def test_redirect_chain_cap_matches_golden(spark):
     eng.release()
 
 
-def test_bloom_and_exact_paths_agree(spark, corpus_pdf, engine):
-    pages = spark.createDataFrame(corpus_pdf, schema=PAGES_SCHEMA)
-    cfg = CrawlConfig(
-        budget_per_host=BUDGET, max_waves=MAX_WAVES, use_bloom=False,
-        n_shards=4, salt_buckets=2, run_checkers=False,
-    )
-    exact = crawl(spark, pages, make_seeds_pdf().url.tolist(), cfg)
-    assert {r["url"] for r in exact.seen.collect()} == {
-        r["url"] for r in engine.seen.collect()
-    }
-
-
 def test_post_form_requests_distinct_identity(spark):
     """CONTRACT v3 (verb + post data on the Request, SURVEY.md §1.1): a page
     linking to B AND posting a form to B produces TWO requests for B — the

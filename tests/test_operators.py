@@ -604,11 +604,9 @@ def test_wave_findings_pass_single_scan_equality(spark):
         F.when(F.xxhash64("url") % 5 == 0, F.lit(None)).otherwise(F.col("html")).alias("html"),
     )
     parsed = fetched.mapInPandas(parse_pages_batch, PARSED_SCHEMA)
-    got_df, handle = checkers.wave_findings_pass(parsed, 4, dictionary)
+    got_df = checkers.wave_findings_pass(parsed, 4, dictionary)
     got = [(r["module"], r["url"], r["wave"], r["detail"], r["referrer"])
            for r in got_df.collect()]
-    if handle is not None:
-        handle.unpersist()
     ok = parsed.filter(F.col("status") == 200)
     want = []
     for r in parsed.filter(F.col("status") == 404).collect():
@@ -751,17 +749,46 @@ def test_pack_sequences_invariants(spark):
             pos += r["doc_tok_end"] - r["doc_tok_start"]
 
 
+def test_over_cap_dictionary_raises(spark):
+    """The spelling dictionary is collected into a plan literal by both
+    crawl() and wave_findings_pass; one row over checkers.DICT_WORDS_CAP
+    must raise with the row count and the cap, not collect it."""
+    from sitecheck_spark import checkers
+    from sitecheck_spark.crawl import CrawlConfig, crawl
+    from sitecheck_spark.sources.corpus import make_pages_pdf, make_seeds_pdf
+
+    cap = checkers.DICT_WORDS_CAP
+    words = lambda n: spark.range(n).select(
+        F.concat(F.lit("w"), F.col("id").cast("string")).alias("word"))
+    assert len(checkers.collect_dictionary(words(cap))) == cap
+    over = words(cap + 1)
+    msg = f"{cap + 1} rows, over the cap of {cap}"
+    with pytest.raises(ValueError, match=msg):
+        checkers.collect_dictionary(over)
+    parsed = spark.createDataFrame([], "url string, wave int")
+    with pytest.raises(ValueError, match=msg):
+        checkers.wave_findings_pass(parsed, 4, over)
+    pages = spark.createDataFrame(
+        make_pages_pdf(4),
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    with pytest.raises(ValueError, match=msg):
+        crawl(spark, pages, make_seeds_pdf().url.tolist(),
+              CrawlConfig(max_waves=1), dictionary=over)
+
+
 def test_knuth_bucket_honors_mod_2_32_for_huge_keys(spark):
     """keys >= ~3.47e9 overflow bigint in key*2654435761; the decimal(38,0)
     arithmetic must keep the documented (key * K) mod 2^32 contract over
-    the whole bigint key range, and stay bit-identical to the old bigint
-    path for in-range keys."""
+    the whole bigint key range, stay bit-identical to the old bigint path
+    for in-range keys, and keep the bigint column type."""
     from pyspark.sql import functions as F
     from sitecheck_spark.operators.sampling import KNUTH, MOD, knuth_bucket
 
     keys = [0, 1, 12345, 3_469_000_000, 2**40 + 7, 2**62 + 123]
     df = spark.createDataFrame([(k,) for k in keys], "k long")
-    got = {r["k"]: int(r["b"]) for r in
-           df.select("k", knuth_bucket(F.col("k")).alias("b")).collect()}
+    out = df.select("k", knuth_bucket(F.col("k")).alias("b"))
+    assert dict(out.dtypes)["b"] == "bigint"
+    got = {r["k"]: r["b"] for r in out.collect()}
     for k in keys:
         assert got[k] == (k * KNUTH) % MOD % 100, k

@@ -489,3 +489,36 @@ def test_remainder_reads_the_cached_election(spark):
         ranked.unpersist()
     assert "InMemoryTableScan" in nodes, nodes
     assert not [n for n in nodes if "Window" in n or "Exchange" in n], nodes
+
+
+def test_new_urls_are_one_exact_anti_join(spark, monkeypatch):
+    """"Already seen" has one answer: each wave's new-url frame executes as
+    ONE left-anti join of the candidates against the seen set — no pandas
+    cogroup anywhere in what it runs, cache builds included."""
+    from sitecheck_spark import crawl as crawl_mod
+    from sitecheck_spark.crawl import CrawlConfig, crawl
+    from sitecheck_spark.plans.checks import executed_nodes
+    from sitecheck_spark.sources.corpus import make_seeds_pdf
+
+    plans = []
+    gate = crawl_mod._robots_gate
+
+    def spy(df, rules, passthrough):
+        if "url_hash" in passthrough:  # the wave's candidate gate
+            df.collect()
+            nodes = executed_nodes(df, into_caches=True)
+            plans.append(([n.nodeName() for n in nodes],
+                          [n.joinType().toString() for n in nodes
+                           if n.nodeName().endswith("Join")]))
+        return gate(df, rules, passthrough)
+
+    monkeypatch.setattr(crawl_mod, "_robots_gate", spy)
+    pages = spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA)
+    res = crawl(spark, pages, make_seeds_pdf().url.tolist(),
+                CrawlConfig(budget_per_host=3, max_waves=3, n_shards=4,
+                            salt_buckets=2, run_checkers=False))
+    res.release()
+    assert len(plans) == 3
+    for names, joins in plans:
+        assert "FlatMapCoGroupsInPandas" not in names, names
+        assert joins.count("LeftAnti") == 1, joins

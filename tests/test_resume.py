@@ -130,8 +130,8 @@ def test_manifest_records_lineage_and_metrics(spark, pages, tmp_path):
     assert m["committed_wave"] == 1
     for wave in ("0", "1"):
         lin = m["waves"][wave]["lineage"]
-        assert {"frontier", "seen", "shards", "fetch_log_delta",
-                "findings_delta"} <= set(lin)
+        assert set(lin) == {"frontier", "seen", "fetch_log_delta",
+                            "findings_delta"}
         assert all(v["n_files"] >= 1 for v in lin.values())
         assert "n_frontier_next" in m["waves"][wave]["metrics"]
 
@@ -188,34 +188,26 @@ def test_seen_compaction_snapshot(spark, pages, tmp_path):
         res.release()
 
 
-def _downgrade_checkpoint_to_pre_v3(spark, ckpt, cfg):
+def _downgrade_checkpoint_to_pre_v3(spark, ckpt):
     """Rewrite a committed wave-1 checkpoint into pre-contract-v3 shape:
-    seen as one row per url with url-only hashes (no verb/post_data),
-    shards rebuilt from those stale hashes, POST rows stripped from the
-    frontier and fetch-log deltas, identity-config keys dropped from the
-    manifest — a checkpoint a pre-v3 engine could actually have written."""
+    seen as one row per url with url-only hashes (no verb/post_data), POST
+    rows stripped from the frontier and fetch-log deltas, identity-config
+    keys dropped from the manifest — a checkpoint a pre-v3 engine could
+    actually have written."""
     import shutil
 
     from pyspark.sql import functions as F
 
-    from sitecheck_spark.crawl import _make_merge_fn, _SHARDS_SCHEMA
-
     cat = WaveCatalog(ckpt)
     assert cat.last_committed_wave() == 1
+    n_shards = cat.manifest["config"]["n_shards"]
     stale_seen = (
         cat.read_state(spark, "seen", 1)
         .select("url").distinct()
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn(
-            "shard", F.pmod(F.col("url_hash"), F.lit(cfg.n_shards)).cast("int")
+            "shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
         )
-        .localCheckpoint(eager=True)
-    )
-    stale_shards = (
-        stale_seen.select("shard", "url_hash")
-        .groupby("shard")
-        .cogroup(spark.createDataFrame([], _SHARDS_SCHEMA).groupby("shard"))
-        .applyInPandas(_make_merge_fn(cfg), _SHARDS_SCHEMA)
         .localCheckpoint(eager=True)
     )
     m = cat.read_manifest()
@@ -246,14 +238,12 @@ def _downgrade_checkpoint_to_pre_v3(spark, ckpt, cfg):
             .localCheckpoint(eager=True)
         )
         _rewrite(log_path, only_get)
-    for name, df in (("seen", stale_seen), ("shards", stale_shards)):
-        path = m["waves"]["1"]["lineage"][name]["path"]
-        _rewrite(path, df)
-        m["waves"]["1"]["lineage"][name]["kind"] = "full"
+    seen_ent = m["waves"]["1"]["lineage"]["seen"]
+    _rewrite(seen_ent["path"], stale_seen)
+    seen_ent["kind"] = "full"
     # pre-v3 manifests carried no identity-config keys and no lineage
     # schemas
-    for key in ("n_shards", "filter_kind"):
-        m["config"].pop(key, None)
+    m["config"].pop("n_shards", None)
     for wave in m["waves"].values():
         for ent in wave["lineage"].values():
             ent.pop("schema", None)
@@ -263,86 +253,23 @@ def _downgrade_checkpoint_to_pre_v3(spark, ckpt, cfg):
         _json.dump(m, f)
 
 
-def test_pre_v3_checkpoint_resume_rebuilds_identity_and_shards(
-    spark, pages, tmp_path
-):
-    """ADVICE r3 (high): a pre-contract-v3 checkpoint stores seen with
-    url-only hashes and bloom shards built from them. Migrating by
-    defaulting verb/post_data while KEEPING those hashes makes every v3
-    probe (xxhash64(verb,url,post_data)) a bloom false-negative, silently
-    re-enqueueing crawled urls. Resume must recompute identities and
-    rebuild shards — no request may ever be fetched twice."""
-    from pyspark.sql import functions as F
-
+def test_pre_v3_checkpoint_resume_fails_closed(spark, pages, tmp_path):
+    """A pre-contract-v3 checkpoint has no request identity: its frontier
+    lacks verb/post_data and its seen set hashes urls alone. Resuming it
+    would re-fetch requests it already crawled, so resume refuses it,
+    naming the contract, and commits nothing."""
     seeds = make_seeds_pdf().url.tolist()
     ckpt = str(tmp_path / "ckpt_prev3")
     crawl(
         spark, pages, seeds, _cfg(max_waves=2, checkpoint_dir=ckpt)
     ).release()
-    _downgrade_checkpoint_to_pre_v3(spark, ckpt, _cfg())
+    _downgrade_checkpoint_to_pre_v3(spark, ckpt)
 
-    resumed = crawl(spark, pages, seeds, _cfg(checkpoint_dir=ckpt))
-    log = resumed.fetch_log.collect()
-    fetched = [(r["verb"], r["url"], r["post_data"]) for r in log]
-    # resume-exactly: every request identity fetched at most once across
-    # the pre-kill deltas and the resumed waves
-    assert len(fetched) == len(set(fetched))
-    # migrated identities are v3 hashes
-    bad = resumed.seen.filter(
-        F.col("url_hash") != F.xxhash64("verb", "url", "post_data")
-    ).count()
-    assert bad == 0
-    resumed.release()
-
-
-def test_resume_twice_after_pre_v3_migration(spark, pages, tmp_path):
-    """ADVICE r4 (high): migration recomputes seen identity in memory, but
-    if the resumed run then commits only deltas the on-disk base stays the
-    pre-v3 snapshot (url-only schema, stale hashes). A SECOND resume would
-    read_state a mixed-schema base+delta parquet chain without mergeSchema
-    — base rows get null verb/post_data or deltas lose POST identity, the
-    exact anti-join stops matching, and crawled requests silently re-fetch.
-    The first commit after a migration must therefore be a full snapshot,
-    making the on-disk chain schema-uniform before any delta lands."""
-    from pyspark.sql import functions as F
-
-    seeds = make_seeds_pdf().url.tolist()
-    ckpt = str(tmp_path / "ckpt_prev3_twice")
-    crawl(spark, pages, seeds, _cfg(max_waves=2, checkpoint_dir=ckpt)).release()
-    _downgrade_checkpoint_to_pre_v3(spark, ckpt, _cfg())
-
-    # First resume, killed again after one wave. seen_compact_every=16
-    # (the default cadence) would make wave 2 a DELTA commit — the
-    # migration must override that and snapshot full.
-    crawl(
-        spark, pages, seeds,
-        _cfg(max_waves=3, checkpoint_dir=ckpt, seen_compact_every=16),
-    ).release()
-    m = WaveCatalog(ckpt).read_manifest()
-    assert m["waves"]["2"]["lineage"]["seen"]["kind"] == "full"
-    # and the snapshot on disk is uniformly contract-v3
-    snap = spark.read.parquet(m["waves"]["2"]["lineage"]["seen"]["path"])
-    assert {"verb", "post_data", "url_hash", "shard"} <= set(snap.columns)
-
-    # Second resume: resume-exactly must still hold end-to-end.
-    resumed = crawl(
-        spark, pages, seeds, _cfg(checkpoint_dir=ckpt, seen_compact_every=16)
-    )
-    log = resumed.fetch_log.collect()
-    fetched = [(r["verb"], r["url"], r["post_data"]) for r in log]
-    assert len(fetched) == len(set(fetched))  # no request fetched twice
-    # every identity in seen is a true v3 hash (no nulls, no stale hashes)
-    bad = resumed.seen.filter(
-        (F.col("url_hash") != F.xxhash64("verb", "url", "post_data"))
-        | F.col("verb").isNull() | F.col("post_data").isNull()
-    ).count()
-    assert bad == 0
-    # and nothing fetched (incl. wave-2+ POSTs) lost its seen identity
-    seen_ids = {
-        (r["verb"], r["url"], r["post_data"]) for r in resumed.seen.collect()
-    }
-    assert set(fetched) <= seen_ids
-    resumed.release()
+    with pytest.raises(ValueError, match="contract v3") as err:
+        crawl(spark, pages, seeds, _cfg(checkpoint_dir=ckpt))
+    for col in ("frontier.verb", "frontier.post_data", "seen.verb"):
+        assert col in str(err.value)
+    assert WaveCatalog(ckpt).last_committed_wave() == 1
 
 
 def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
@@ -393,10 +320,10 @@ def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
 
 @pytest.mark.parametrize("kw", [
     dict(max_waves=3),
-    # exact seen path, compaction at wave 2: the resume reads a seen chain
-    # of a compaction (written from parquet read back) plus a delta
-    # (written from the wave's fresh rows) — one recorded schema for both
-    dict(max_waves=4, use_bloom=False, seen_compact_every=2),
+    # compaction at wave 2: the resume reads a seen chain of a compaction
+    # (written from parquet read back) plus a delta (written from the
+    # wave's fresh rows) — one recorded schema for both
+    dict(max_waves=4, seen_compact_every=2),
 ], ids=["bloom", "exact-compacting"])
 def test_frontier_counts_and_resume_reads_launch_no_jobs(spark, pages,
                                                          tmp_path, kw):

@@ -68,3 +68,14 @@ def test_cuckoo_delete_roundtrip():
     assert c.contains(items[1000:]).all()
     rt = CuckooShard.from_bytes(c.to_bytes())
     assert (rt.table == c.table).all()
+
+
+def test_cuckoo_saturation_never_false_negative():
+    c = CuckooShard(16)  # tiny: 64 slots
+    rng = np.random.default_rng(1)
+    items = rng.integers(-(2**63), 2**63 - 1, 500, dtype=np.int64)
+    c.insert(items)
+    assert c.saturated
+    assert c.contains(items).all()  # saturated -> all-True, never a false negative
+    rt = CuckooShard.from_bytes(c.to_bytes())
+    assert rt.saturated
