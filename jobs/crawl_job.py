@@ -15,6 +15,11 @@ executors, memory); this script only builds the session when run standalone.
 A killed job rerun with the same --checkpoint-dir resumes exactly from the
 last committed wave (sitecheck_spark/sources/catalog.py).
 
+--pages is read as a parquet path, which carries no bucket spec, so every
+wave's fetch broadcasts the elected urls into the pages scan and shuffles
+the matched html once. The zero-html-shuffle fetch needs a bucketed pages
+table (catalog.register_pages_bucketed_table) handed to crawl() directly.
+
 PATH RESTRICTIONS: --pages and --checkpoint-dir may be any Spark-readable
 URI (s3a://, hdfs://, file://) — the wave catalog routes its rename-commit
 protocol through the Hadoop FileSystem API for scheme'd bases (with the
@@ -43,31 +48,21 @@ def main() -> None:
     p.add_argument("--max-waves", type=int, default=50)
     p.add_argument("--max-depth", type=int, default=10)
     p.add_argument("--n-shards", type=int, default=256)
-    p.add_argument("--no-broadcast-fetch", action="store_true",
-                   help="use a shuffle join for the fetch (bucketed pages tables)")
     args = p.parse_args()
 
     from sitecheck_spark.crawl import CrawlConfig, crawl
     from sitecheck_spark.reports import write_reports
-    from sitecheck_spark.sources.catalog import pages_sidecar_buckets
 
     spark = SparkSession.builder.appName("sitecheck-spark-crawl").getOrCreate()
 
-    # Detect the bucketed layout through the Hadoop FS API so remote URIs
-    # (s3a://, hdfs://) get the bucket-pruned fetch join too.
-    n_buckets = pages_sidecar_buckets(spark, args.pages)
     pages = spark.read.parquet(args.pages)
-    print(f"pages layout: "
-          f"{'bucketed(n=%d), DPP fetch join' % n_buckets if n_buckets else 'plain parquet'}")
     dictionary = spark.read.parquet(args.dictionary) if args.dictionary else None
     cfg = CrawlConfig(
         budget_per_host=args.budget,
         max_waves=args.max_waves,
         max_depth=args.max_depth,
         n_shards=args.n_shards,
-        pages_buckets=n_buckets,
         checkpoint_dir=args.checkpoint_dir,
-        broadcast_fetch=not args.no_broadcast_fetch,
         verbose=True,
     )
     res = crawl(spark, pages, args.seeds, cfg, dictionary=dictionary)

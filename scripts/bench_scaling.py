@@ -59,12 +59,11 @@ WARMUP_WAVES = int(os.environ.get("SPARK_GRAFT_WARMUP_WAVES", str(WAVES)))
 CODEC = os.environ.get("SPARK_GRAFT_CORPUS_CODEC", "zstd")
 
 _BUCKETED_RAW = os.environ.get("SPARK_GRAFT_BUCKETED")
-if _BUCKETED_RAW not in (None, "", "0", "1", "table"):
+if _BUCKETED_RAW not in (None, "", "0", "table"):
     raise SystemExit(
         f"SPARK_GRAFT_BUCKETED={_BUCKETED_RAW!r} is not a valid mode — use "
-        "unset/''/'0' (plain corpus + broadcast fetch), '1' (directory-"
-        "bucketed layout + shuffle fetch), or 'table' (bucketed TABLE, "
-        "storage-partitioned join)"
+        "unset/''/'0' (plain corpus + broadcast fetch) or 'table' (bucketed "
+        "TABLE, storage-partitioned join)"
     )
 BUCKETED = _BUCKETED_RAW if _BUCKETED_RAW not in ("", "0") else None
 
@@ -152,22 +151,18 @@ def run_level(cpus: int, runs: int, warmup_waves: int) -> dict:
 
         spark.sparkContext.addPyFile(build_zip())
 
-    # SPARK_GRAFT_BUCKETED=1 benches the directory-bucketed layout: pages
-    # partitioned by pmod(xxhash64(url), N) + shuffle fetch join
-    # (broadcast_fetch=False). At a 10^10-URL frontier the elected set
-    # cannot be broadcast — the driver-side collect+ship is a serial Amdahl
-    # term that caps measured scaling — so a non-broadcast path IS the
-    # production shape. SPARK_GRAFT_BUCKETED=table benches the bucketed
-    # TABLE layout (storage-partitioned join, html crosses zero exchanges)
-    # — the shape an Iceberg bucket(N,url) table gives, and the one that
-    # dodges the shared-disk html-shuffle bottleneck measured in round 4.
-    n_buckets = 64
+    # SPARK_GRAFT_BUCKETED=table benches the bucketed TABLE layout
+    # (storage-partitioned join, html crosses zero exchanges) — the shape an
+    # Iceberg bucket(N,url) table gives, and the one that dodges the
+    # shared-disk html-shuffle bottleneck measured in round 4. crawl()
+    # detects the table from its scan.
     if BUCKETED == "table":
         from sitecheck_spark.sources.catalog import (
             register_pages_bucketed_table,
             write_pages_bucketed_table,
         )
 
+        n_buckets = 64
         corpus = CORPUS + "-btable"
         spark.conf.set("spark.sql.parquet.compression.codec", CODEC)
         if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
@@ -182,20 +177,6 @@ def run_level(cpus: int, runs: int, warmup_waves: int) -> dict:
             pages = register_pages_bucketed_table(
                 spark, corpus, n_buckets=n_buckets, table="pages_btable"
             )
-    elif BUCKETED == "1":
-        from sitecheck_spark.sources.catalog import (
-            read_pages_bucketed,
-            write_pages_bucketed,
-        )
-
-        corpus = CORPUS + "-bucketed"
-        spark.conf.set("spark.sql.parquet.compression.codec", CODEC)
-        if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-            write_pages_bucketed(
-                generate_pages_spark(spark, N_PAGES, seed=42, profile=profile),
-                corpus, n_buckets=n_buckets,
-            )
-        pages, n_buckets = read_pages_bucketed(spark, corpus)
     else:
         corpus = CORPUS
         if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
@@ -221,9 +202,6 @@ def run_level(cpus: int, runs: int, warmup_waves: int) -> dict:
         cfg = CrawlConfig(
             budget_per_host=10**9, max_waves=waves, max_depth=10**6,
             n_shards=64, salt_buckets=8, run_checkers=True,
-            broadcast_fetch=not BUCKETED,
-            pages_buckets=n_buckets if BUCKETED == "1" else None,
-            pages_prebucketed=BUCKETED == "table",
             verbose=os.environ.get("SPARK_GRAFT_BENCH_VERBOSE") == "1",
             # split the fused wave_chain job into labeled sub-phase jobs
             # (elect / fetch+parse / probe+gate) so N-vs-4N stage tables

@@ -15,7 +15,13 @@ become POST requests crawled independently of their GET twins.
                      global per-host top-B), computed ONCE per wave as one
                      persisted frame with a win flag; elected and remainder
                      are filters of it
-      3. fetch     = elected left-join latest pages on url (J1)
+      3. fetch     = elected left-join latest pages on url (J1), in the one
+                     shape the pages scan selects (bucketed_on_url): a
+                     bucketed pages table (HashPartitioning(url, n)) takes a
+                     plain equi-join whose dedup agg reuses the join
+                     partitioning, so html crosses no exchange; any other
+                     pages take the broadcast elected urls, then one
+                     repartition(n_parse, url), so html crosses one
       4. parse     = ONE vectorized mapInPandas pass (C6) emitting outlinks +
                      text + title + meta + comments + a status column (fetch
                      misses pass through as 404 rows, so the html-carrying
@@ -75,8 +81,12 @@ from sitecheck_spark.checkers import collect_dictionary, wave_findings_pass
 from sitecheck_spark.extract import PARSED_SCHEMA, parse_pages_batch
 from sitecheck_spark.functions.urls import canonicalize, netloc_of
 from sitecheck_spark.golden import IGNORED_EXTENSIONS
-from sitecheck_spark.sources import catalog as catalog_mod
-from sitecheck_spark.sources.catalog import WaveCatalog, ckpt_label, run_concurrently
+from sitecheck_spark.sources.catalog import (
+    WaveCatalog,
+    bucketed_on_url,
+    ckpt_label,
+    run_concurrently,
+)
 
 T = TypeVar("T")
 
@@ -98,18 +108,6 @@ class CrawlConfig:
     # frontier the cumulative seen dwarfs any single wave's delta — full
     # per-wave snapshots were the one super-linear-in-waves checkpoint cost.
     seen_compact_every: int = 16
-    # Set when `pages` carries catalog.PAGES_BUCKET_COL (write_pages_bucketed
-    # layout): the fetch join adds the bucket key so the scan prunes to the
-    # partitions holding elected urls (dynamic partition pruning). MUST match
-    # the writer's modulus — validated on a sample at crawl start.
-    pages_buckets: int | None = None
-    # Set when `pages` is a Spark bucketed TABLE (catalog.
-    # write_pages_bucketed_table, bucketBy(N, url)): the fetch join and the
-    # version-dedup agg reuse the table's bucketing, so html crosses ZERO
-    # exchanges per wave — the storage-partitioned-join shape an Iceberg
-    # bucket(N, url) table gives. Takes precedence over broadcast_fetch /
-    # pages_buckets. Parse parallelism = the table's bucket count.
-    pages_prebucketed: bool = False
     run_checkers: bool = True
     verbose: bool = False
     # Attribution mode for the scaling telemetry: run the wave chain's
@@ -120,22 +118,6 @@ class CrawlConfig:
     # which fills the election cache the parse job would fill); total work
     # is otherwise unchanged — keep False outside benchmarking.
     phase_labels: bool = False
-    # Broadcast the elected url set into the pages scan (no corpus shuffle).
-    # Right whenever one wave's election fits in executor memory. Set False
-    # on clusters where budget*hosts exceeds broadcast limits — there the
-    # shuffle join is co-located by the pages table's url bucketing anyway.
-    broadcast_fetch: bool = True
-    # Partitions for the vectorized parse pass. AQE coalesces exchanges by
-    # shuffle BYTES, which starves the downstream Python stage of
-    # parallelism (a 200 MB wave coalesces to ~4 tasks on a 32-core
-    # cluster). None -> max(2 * defaultParallelism,
-    # frontier_rows / parse_rows_per_partition): the first term keeps every
-    # core busy on small waves, the second caps PARTITION SIZE on big waves
-    # — sizing by cores alone hands a small cluster multi-GB partitions
-    # (html + parse output) and OOMs its executors; partition count must
-    # scale with data, not cluster size.
-    parse_partitions: int | None = None
-    parse_rows_per_partition: int = 20_000
 
 
 @dataclass
@@ -163,10 +145,21 @@ FINDINGS_SCHEMA = "module string, url string, wave int, detail string, referrer 
 _EXT_PATTERN = "(?i)(?:" + "|".join(re.escape(e) for e in IGNORED_EXTENSIONS) + ")$"
 _ISIN_MAX_NETLOCS = 64  # above this, the allow-list joins instead of inlining
 _WAVE_ROWS_PER_PARTITION = 12_500  # frontier rows per wave-scoped shuffle partition
+# Partitions for the vectorized parse pass: max(2 * defaultParallelism,
+# frontier rows / _PARSE_ROWS_PER_PARTITION). AQE coalesces exchanges by
+# shuffle BYTES, which starves the downstream Python stage of parallelism
+# (a 200 MB wave coalesces to ~4 tasks on a 32-core cluster). The first
+# term keeps every core busy on small waves, the second caps PARTITION SIZE
+# on big waves — sizing by cores alone hands a small cluster multi-GB
+# partitions (html + parse output) and OOMs its executors; partition count
+# must scale with data, not cluster size.
+_PARSE_ROWS_PER_PARTITION = 20_000
 
 
 def latest_pages(pages: DataFrame) -> DataFrame:
-    """As-of pick of the newest warc_ts version per url (W3).
+    """As-of pick of the newest warc_ts version per url (W3). crawl()
+    applies it to each wave's fetch-join matches, which arrive partitioned
+    on url, so it adds no exchange there.
 
     max_by instead of a window: one partial-aggregating shuffle, no sort —
     the right plan when versions-per-url is small and urls are many. The
@@ -310,48 +303,11 @@ def crawl(
 
     # Fetch source: version dedup (as-of max warc_ts) happens per wave on the
     # *matched* rows only — joining first and deduping after means the big
-    # html column is never shuffled corpus-wide or columnar-cached. AQE picks
-    # the join strategy at runtime: broadcast while the elected set is small,
-    # sort-merge against the (bucketed, at scale) pages table when it is not.
-    bucketed_fetch = (
-        cfg.pages_buckets is not None and catalog_mod.PAGES_BUCKET_COL in pages.columns
-    )
-    if bucketed_fetch:
-        # Guard against a modulus mismatch (would read the wrong partitions
-        # and surface as phantom 404s). The layout sidecar is authoritative
-        # — it records what the writer actually used, so a mismatch is
-        # caught even when a row sample happens to agree (pmod(h, 2N) ==
-        # pmod(h, N) for half of all hashes). Sidecar-less inputs (hand-laid
-        # directories) fall back to the row sample.
-        root = catalog_mod.infer_bucketed_root(pages.inputFiles())
-        sidecar_n = (
-            catalog_mod.pages_sidecar_buckets(spark, root) if root else None
-        )
-        if sidecar_n is not None:
-            if sidecar_n != cfg.pages_buckets:
-                raise ValueError(
-                    f"pages layout at {root} was written with "
-                    f"n_buckets={sidecar_n} (sidecar), but "
-                    f"pages_buckets={cfg.pages_buckets} was configured"
-                )
-        else:
-            bad = (
-                pages.select("url", catalog_mod.PAGES_BUCKET_COL).limit(100)
-                .filter(
-                    catalog_mod.bucket_of(F.col("url"), cfg.pages_buckets)
-                    != F.col(catalog_mod.PAGES_BUCKET_COL)
-                )
-                .count()
-            )
-            if bad:
-                raise ValueError(
-                    f"pages.{catalog_mod.PAGES_BUCKET_COL} does not match "
-                    f"pmod(xxhash64(url), {cfg.pages_buckets}) — wrong pages_buckets?"
-                )
-    fetch_cols = ["url", "warc_ts", "html"] + (
-        [catalog_mod.PAGES_BUCKET_COL] if bucketed_fetch else []
-    )
-    pages_slim = pages.select(*fetch_cols)
+    # html column is never shuffled corpus-wide or columnar-cached. The
+    # join's shape follows from the pages scan's partitioning (step 3 of the
+    # module docstring); planning it launches no job.
+    pages_slim = pages.select("url", "warc_ts", "html")
+    pages_bucketed = bucketed_on_url(pages_slim)
     if robots is None:
         robots = robots_from_pages(pages)
     robots = robots.persist()
@@ -492,80 +448,29 @@ def crawl(
             if cfg.phase_labels:
                 _labelled("wave_elect", elected.count)
 
+            # The two fetch shapes of step 3 (plan-asserted in
+            # tests/test_plans.py, incl. the max_by partial buffer that
+            # smuggles html under a fresh attribute name). Bucketed pages:
+            # EnsureRequirements shuffles ONLY the slim elected side into the
+            # table's buckets and the dedup agg reuses the join partitioning.
+            # Other pages: n_parse is decided before the join, so the one
+            # html shuffle lands directly in the parse partitions. Either way
+            # the elected-side left join shuffles only slim frontier columns.
+            # The html-carrying join output is consumed EXACTLY ONCE, by the
+            # parse pass (fetch misses flow through as status=404 rows), and
+            # never cached: a cache of it made every downstream `html IS
+            # NULL` filter re-read the html batches (~15 GB/run of fetch-log
+            # input in the round-4 scaling stage tables).
             elected_urls = elected.select("url")
-            fetch_keys = ["url"]
-            if bucketed_fetch:
-                elected_urls = elected_urls.withColumn(
-                    catalog_mod.PAGES_BUCKET_COL,
-                    catalog_mod.bucket_of(F.col("url"), cfg.pages_buckets),
-                )
-                fetch_keys = [catalog_mod.PAGES_BUCKET_COL, "url"]
-            # Parse parallelism ∝ cores, not bytes: AQE's byte-based coalescing
-            # would starve the CPU-bound parse stage. Decided BEFORE the fetch
-            # join so the html shuffle lands directly in n_parse partitions.
-            n_parse = cfg.parse_partitions or max(
-                2 * spark.sparkContext.defaultParallelism,
-                -(-n_frontier // cfg.parse_rows_per_partition),  # ceil div
-            )
-            # html crosses EXACTLY ONE shuffle per wave in BOTH fetch modes
-            # (plan-asserted in tests/test_plans.py, incl. the max_by partial
-            # buffer that smuggles html under a fresh attribute name):
-            # - broadcast fetch: the join is exchange-free; one explicit
-            #   repartition(n_parse, url) feeds the version-dedup agg, which
-            #   reuses that partitioning (no second exchange).
-            # - shuffle fetch (bucketed layout): the join's own Ensure-exchange
-            #   of the pages side IS the html shuffle. Pre-partitioning the slim
-            #   elected side on the join keys into n_parse makes that exchange
-            #   land directly in n_parse partitions, and aggregating on the SAME
-            #   keys (url_bucket is a function of url, so groupBy(bucket, url)
-            #   == groupBy(url)) reuses the join partitioning — aggregating on
-            #   url alone would re-exchange the max_by buffer (= html bytes).
-            # Downstream, the elected-side left join uses the agg's keys too, so
-            # only slim frontier columns shuffle and the parse pass inherits the
-            # n_parse partitions unchanged.
-            if cfg.pages_prebucketed:
-                # bucketed-table fetch: the pages scan reports
-                # HashPartitioning(url, n_buckets), so EnsureRequirements
-                # shuffles ONLY the slim elected side into the buckets; the
-                # dedup agg below groups on the same key and reuses the join
-                # partitioning — html never crosses an exchange (plan-asserted
-                # with a zero count in tests/test_plans.py).
-                matched = pages_slim.join(elected_urls, fetch_keys)
-                agg_in = matched
-                agg_keys = ["url"]
-            elif cfg.broadcast_fetch:
-                matched = pages_slim.join(F.broadcast(elected_urls), fetch_keys)
-                agg_in = matched.repartition(n_parse, "url")
-                agg_keys = ["url"]
+            if pages_bucketed:
+                matched = pages_slim.join(elected_urls, "url")
             else:
+                n_parse = max(2 * spark.sparkContext.defaultParallelism,
+                              -(-n_frontier // _PARSE_ROWS_PER_PARTITION))
                 matched = pages_slim.join(
-                    elected_urls.repartition(n_parse, *fetch_keys), fetch_keys
-                )
-                agg_in = matched
-                agg_keys = fetch_keys
-            latest_rows = agg_in.groupBy(*agg_keys).agg(
-                # total tie-break on (warc_ts, md5(html)) — see latest_pages()
-                F.max_by("html", F.struct("warc_ts", F.md5("html"))).alias("html")
-            )
-            # One corpus scan+join per wave, consumed EXACTLY ONCE by the parse
-            # pass: fetch misses flow through as status=404 rows (null-html fast
-            # path inside parse_pages_batch), so the html-carrying join output is
-            # never kept — only the slim parsed table is (checkpointed). Caching the join
-            # output instead (round <= 4) meant every downstream `html IS NULL`
-            # filter re-read the cached html column batches: ~15 GB/run of the
-            # fetch-log job's input in the round-4 scaling stage tables was
-            # exactly that traffic.
-            if agg_keys == ["url"]:
-                fetched = elected.join(latest_rows, "url", "left")
-            else:
-                fetched = (
-                    elected.withColumn(
-                        catalog_mod.PAGES_BUCKET_COL,
-                        catalog_mod.bucket_of(F.col("url"), cfg.pages_buckets),
-                    )
-                    .join(latest_rows, agg_keys, "left")
-                    .drop(catalog_mod.PAGES_BUCKET_COL)
-                )
+                    F.broadcast(elected_urls), "url"
+                ).repartition(n_parse, "url")
+            fetched = elected.join(latest_pages(matched), "url", "left")
             parsed = _labelled(
                 "wave_fetch_parse" if cfg.phase_labels else "wave_chain",
                 fetched.select("url", "netloc", F.lit(wave).alias("wave"), "depth",

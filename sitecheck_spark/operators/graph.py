@@ -68,19 +68,20 @@ def pagerank(
     and driver re-analysis cost.
 
     `n_nodes` (optional size hint, same contract as connected_components):
-    scopes the per-iteration shuffle width to the graph size and
-    materializes the final ranks INSIDE that scope (the rank state is
-    ~24 B/node, so corpus-scale session partitioning degrades every
-    iteration into near-empty tasks whose scheduling barriers dominate —
-    measured 2.09 -> 1.50 s at sf1.0/50k nodes, local[32]). None keeps the
-    session partitioning and stays fully lazy.
+    scopes the per-iteration shuffle width to the graph size (the rank
+    state is ~24 B/node, so corpus-scale session partitioning degrades
+    every iteration into near-empty tasks whose scheduling barriers
+    dominate — measured 2.09 -> 1.50 s at sf1.0/50k nodes, local[32]). When
+    that changes the width, the final ranks are materialized INSIDE the
+    scope; when the derived width equals the session's, or with None, the
+    result stays fully lazy.
     """
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     ranks = nodes.withColumn("pr", F.lit(R0).cast("long"))
     # overflow-safe 0.85 damping: never forms 85*s (see module docstring)
     damped = ("85 * (coalesce(s, 0) div 100) "
               "+ (85 * (coalesce(s, 0) % 100)) div 100")
-    with _round_conf(nodes.sparkSession, n_nodes):
+    with _round_conf(nodes.sparkSession, n_nodes) as scope:
         prev_cp = None
         for i in range(iterations):
             contribs = (
@@ -105,10 +106,11 @@ def pagerank(
                     # instead of holding every 10th rank table until driver GC.
                     _release_leaf(prev_cp)
                 prev_cp = ranks
-        if n_nodes is not None:
+        if scope.prev is not None:
             # shuffle.partitions is read at EXECUTION time: a lazy return
-            # would plan every exchange at the restored session width, so
-            # the scope must materialize the result while it is active.
+            # would plan every exchange at the restored session width, so a
+            # scope that changed the width must materialize the result
+            # while it is active. A no-op scope leaves the result lazy.
             ranks = ranks.localCheckpoint(eager=True)
             if prev_cp is not None:
                 _release_leaf(prev_cp)

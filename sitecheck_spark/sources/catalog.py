@@ -51,21 +51,6 @@ T = TypeVar("T")
 
 MANIFEST = "manifest.json"
 
-# -- bucketed pages layout ---------------------------------------------------
-# Parquet stand-in for Iceberg's bucket(N, url) partition transform: the
-# pages table is directory-partitioned by pmod(xxhash64(url), N), so the
-# per-wave fetch join prunes its scan to exactly the partitions holding
-# elected urls (dynamic partition pruning; plan-asserted in
-# tests/test_plans.py). Swapping in Iceberg replaces this with a real bucket
-# transform and keeps the crawl-side join unchanged.
-
-PAGES_BUCKET_COL = "url_bucket"
-_BUCKETS_SIDECAR = "_url_buckets.json"
-
-
-def bucket_of(url_col, n_buckets: int):
-    return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
-
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) via the JVM Hadoop FS API — speaks every
@@ -76,68 +61,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def _sidecar_path(table_path: str) -> str:
-    return table_path.rstrip("/") + "/" + _BUCKETS_SIDECAR
-
-
-def infer_bucketed_root(files: list[str]) -> str | None:
-    """Root of a write_pages_bucketed directory layout from a DataFrame's
-    inputFiles(): the parent of the first url_bucket=<k> path segment, or
-    None if the files are not bucket-partitioned. Lets crawl() find the
-    layout sidecar — the authoritative bucket count — given only the
-    DataFrame it was handed."""
-    for f in files:
-        parts = f.split("/")
-        for i, p in enumerate(parts):
-            if p.startswith(PAGES_BUCKET_COL + "="):
-                return "/".join(parts[:i])
-    return None
-
-
-def pages_sidecar_buckets(spark: SparkSession, path: str) -> int | None:
-    """n_buckets from the layout sidecar, or None if `path` is not a
-    write_pages_bucketed layout. Resolved through the Hadoop FileSystem API
-    so remote URIs (s3a://, hdfs://) detect the bucketed layout too — an
-    os.path.exists probe would silently miss it and lose DPP pruning."""
-    fs, hpath = _hadoop_fs(spark, _sidecar_path(path))
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        body = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(body)["n_buckets"]
-
-
-def write_pages_bucketed(pages: DataFrame, dest: str, n_buckets: int = 64) -> None:
-    """Write `pages` hash-partitioned by bucket_of(url). The bucket count is
-    recorded in a sidecar so readers cannot silently join with a mismatched
-    modulus (which would surface as phantom 404s)."""
-    spark = pages.sparkSession
-    (
-        pages.withColumn(PAGES_BUCKET_COL, bucket_of(F.col("url"), n_buckets))
-        .write.mode("overwrite").partitionBy(PAGES_BUCKET_COL).parquet(dest)
-    )
-    fs, hpath = _hadoop_fs(spark, _sidecar_path(dest))
-    out = fs.create(hpath, True)
-    try:
-        body = json.dumps({"n_buckets": n_buckets, "column": PAGES_BUCKET_COL})
-        out.write(bytearray(body.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def read_pages_bucketed(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
-    """(pages DataFrame incl. url_bucket, n_buckets) — pass n_buckets to
-    CrawlConfig.pages_buckets."""
-    n_buckets = pages_sidecar_buckets(spark, path)
-    if n_buckets is None:
-        raise FileNotFoundError(
-            f"{_sidecar_path(path)}: not a write_pages_bucketed layout"
-        )
-    return spark.read.parquet(path), n_buckets
-
 # -- bucketed TABLE layout (zero-html-shuffle fetch) -------------------------
 
 PAGES_TABLE = "pages_bucketed"
@@ -147,21 +70,19 @@ def write_pages_bucketed_table(
     pages: DataFrame, n_buckets: int = 64, table: str = PAGES_TABLE,
     path: str | None = None,
 ) -> None:
-    """Spark bucketed-table stand-in #2 for Iceberg's bucket(N, url) — the
+    """Spark bucketed-table stand-in for Iceberg's bucket(N, url) — the
     storage-partitioned-join shape. The table's scan reports its hash
     bucketing to Catalyst, so the per-wave fetch join shuffles ONLY the slim
     elected-url side into the table's buckets and the version-dedup agg
     reuses the join partitioning: html:binary — the dominant bytes of a
     crawl — crosses ZERO exchanges per wave (plan-asserted in
-    tests/test_plans.py). Compare write_pages_bucketed (directory layout):
-    that buys dynamic partition pruning but its scan has no Catalyst-known
-    partitioning, so the join must shuffle the html through disk — the
-    measured 4N bottleneck on shared-disk hosts (BASELINE.md round 4).
+    tests/test_plans.py). crawl() detects the table from its scan
+    (bucketed_on_url); no config selects the shape.
 
     Wave parallelism in this mode equals n_buckets (the join/agg/parse
     stage inherits the table's buckets) — size n_buckets >= the cluster's
     cores. Requires a session catalog (warehouse dir); pass the result of
-    read_pages_table to crawl() with CrawlConfig(pages_prebucketed=True)."""
+    read_pages_table (or register_pages_bucketed_table) to crawl()."""
     w = (
         pages.write.mode("overwrite").format("parquet")
         .bucketBy(n_buckets, "url").sortBy("url")
@@ -169,6 +90,23 @@ def write_pages_bucketed_table(
     if path is not None:
         w = w.option("path", path)  # external table: files survive the session
     w.saveAsTable(table)
+
+
+def bucketed_on_url(pages: DataFrame) -> bool:
+    """True when `pages`' planned scan is hash-partitioned on the `url`
+    attribute alone, as a bucketed pages table's is (and a plain parquet
+    or local frame's, or any scan with bucketing disabled, is not).
+    crawl() picks its fetch join from this. It only plans the query: no
+    Spark job."""
+    part = pages._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    exprs = part.expressions()
+    if exprs.size() != 1:
+        return False
+    key = exprs.apply(0)
+    return (key.getClass().getSimpleName() == "AttributeReference"
+            and key.name() == "url")
 
 
 PAGES_DDL = "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
@@ -385,9 +323,9 @@ class WaveCatalog:
     Spark-readable URI (file://, hdfs://, s3a://, ...) — URI bases route
     every write (table rename-into-place, manifest tmp+rename) through the
     JVM Hadoop FileSystem API, the same seam the read side
-    (read_deltas_through, pages_sidecar_buckets) already uses, so the
-    commit protocol runs wherever the cluster's checkpoints live, not just
-    on the driver's local disk. Caveat inherited from the FS: rename is
+    (read_deltas_through) already uses, so the commit protocol runs
+    wherever the cluster's checkpoints live, not just on the driver's
+    local disk. Caveat inherited from the FS: rename is
     atomic on HDFS/file, copy-based on raw S3 (use a consistent committer
     layer there, as any Spark job must).
 

@@ -1,6 +1,8 @@
 import os
 import sys
 import tempfile
+import time
+import uuid
 
 import pytest
 
@@ -72,3 +74,28 @@ def _sweep_caches_between_modules(spark):
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def jobs_launched_by(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched). fn runs under a fresh job
+    group; a sentinel job under a second group follows it, and since the
+    status tracker receives job events in order, once it shows the
+    sentinel it shows every job fn launched."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "probe")
+        out = fn()
+        sc.setJobGroup(group + "-end", "sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-end"):
+        if time.monotonic() > deadline:
+            raise AssertionError("the sentinel job never reached the tracker")
+        time.sleep(0.1)
+    return out, list(tracker.getJobIdsForGroup(group))

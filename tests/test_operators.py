@@ -413,6 +413,32 @@ def test_pagerank_50_iterations_lineage_bounded(spark):
     assert len(vals) == 1
 
 
+def test_pagerank_noop_scope_stays_lazy(spark):
+    """With n_nodes set but a scope that leaves the shuffle width as it is
+    (8 nodes against the session's 4 partitions), pagerank() has nothing to
+    materialize inside the scope: the call itself launches no Spark job,
+    and its ranks equal the unscoped ones."""
+    from sitecheck_spark.functions.tuning import sized_partitions
+    from sitecheck_spark.operators.graph import (
+        _ROUND_ROWS_PER_PARTITION,
+        pagerank,
+    )
+
+    from conftest import jobs_launched_by
+
+    nodes = spark.range(8).select(F.col("id").alias("node"))
+    edges = spark.range(8).select(
+        F.col("id").alias("src"), ((F.col("id") * 3 + 1) % 8).alias("dst")
+    )
+    assert sized_partitions(spark, 8, _ROUND_ROWS_PER_PARTITION) == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))  # the scope is a no-op
+    ranks, jobs = jobs_launched_by(
+        spark, lambda: pagerank(nodes, edges, iterations=5, n_nodes=8))
+    assert jobs == []
+    assert sorted(ranks.collect()) == sorted(
+        pagerank(nodes, edges, iterations=5).collect())
+
+
 def test_connected_components_vs_union_find(spark):
     """Seeded random graph (with self-loops, duplicate and reversed edges)
     against a pure-Python union-find: labels must equal the exact

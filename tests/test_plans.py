@@ -17,7 +17,7 @@ from sitecheck_spark.plans.checks import (
 )
 from sitecheck_spark.sources.corpus import make_pages_pdf
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_launched_by
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -27,6 +27,26 @@ def pages_parquet(spark):
     d = tempfile.mkdtemp() + "/pages"
     spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA).write.parquet(d)
     return d
+
+
+@pytest.fixture(scope="module")
+def pages_btable(spark):
+    """The 60-page corpus as a bucketed table re-registered from its files,
+    as a fresh session sees it. 16 buckets: not the broadcast shape's parse
+    width (2 x 4 cores), so its repartition(n_parse, url) cannot happen to
+    match the table's own partitioning."""
+    from sitecheck_spark.sources.catalog import (
+        register_pages_bucketed_table,
+        write_pages_bucketed_table,
+    )
+
+    loc = tempfile.mkdtemp() + "/pages_btable_fetch"
+    write_pages_bucketed_table(
+        spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA), n_buckets=16,
+        table="pages_bt_fetch", path=loc,
+    )
+    return register_pages_bucketed_table(spark, loc, n_buckets=16,
+                                         table="pages_bt_fetch_rereg")
 
 
 def test_html_pruned_from_link_count_scan(spark, pages_parquet):
@@ -66,75 +86,6 @@ def test_fetch_join_scans_only_needed_columns(spark, pages_parquet):
     assert_broadcast_join(latest)
 
 
-def test_bucketed_fetch_join_prunes_partitions(spark):
-    """write_pages_bucketed layout: the fetch join keyed on (url_bucket, url)
-    must plan a dynamic-partition-pruning filter on the pages scan — only
-    the directories holding elected urls get read."""
-    import tempfile
-
-    from sitecheck_spark.sources.catalog import (
-        PAGES_BUCKET_COL,
-        bucket_of,
-        read_pages_bucketed,
-        write_pages_bucketed,
-    )
-
-    d = tempfile.mkdtemp() + "/pages_bucketed"
-    src = spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA)
-    write_pages_bucketed(src, d, n_buckets=8)
-    pages, n_buckets = read_pages_bucketed(spark, d)
-    assert n_buckets == 8
-
-    # the engine's elected set always carries selective filters (politeness
-    # rank / fast-path predicates) — DPP requires one on the filtering side
-    elected = (
-        spark.createDataFrame(
-            [("https://big.example.com/p/0.html", 0)], "url string, depth int"
-        )
-        .filter(F.col("depth") <= 5)
-        .select("url")
-        .withColumn(PAGES_BUCKET_COL, bucket_of(F.col("url"), 8))
-    )
-    matched = pages.select("url", "warc_ts", "html", PAGES_BUCKET_COL).join(
-        F.broadcast(elected), [PAGES_BUCKET_COL, "url"]
-    )
-    plan = formatted_plan(matched)
-    assert "dynamicpruning" in plan.lower(), plan
-
-
-def test_bucketed_crawl_equals_plain_crawl(spark):
-    """End-to-end: the bucket-pruned fetch path must produce the identical
-    crawl (same fetch log, same seen set) as the plain path."""
-    import tempfile
-
-    from sitecheck_spark.crawl import CrawlConfig, crawl
-    from sitecheck_spark.sources.catalog import read_pages_bucketed, write_pages_bucketed
-    from sitecheck_spark.sources.corpus import make_seeds_pdf
-
-    src = spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA)
-    d = tempfile.mkdtemp() + "/pages_bucketed_e2e"
-    write_pages_bucketed(src, d, n_buckets=8)
-    bucketed, n_buckets = read_pages_bucketed(spark, d)
-
-    seeds = make_seeds_pdf().url.tolist()
-    base = dict(budget_per_host=3, max_waves=4, n_shards=4, salt_buckets=2,
-                run_checkers=False)
-    plain = crawl(spark, src, seeds, CrawlConfig(**base))
-    pruned = crawl(spark, bucketed, seeds, CrawlConfig(**base, pages_buckets=n_buckets))
-    key = lambda res: sorted(
-        (r["wave"], r["url"], r["status"]) for r in res.fetch_log.collect()
-    )
-    assert key(plain) == key(pruned)
-    assert {r["url"] for r in plain.seen.collect()} == {
-        r["url"] for r in pruned.seen.collect()
-    }
-    # wrong modulus must be caught, not silently 404
-    with pytest.raises(ValueError, match="pages_buckets"):
-        crawl(spark, bucketed, seeds, CrawlConfig(**base, pages_buckets=7))
-    plain.release()
-    pruned.release()
-
-
 def test_html_crosses_exactly_one_shuffle_per_wave(spark, pages_parquet):
     """The 100-TB contract of the wave chain (crawl.py fetch→dedup→parse):
     html:binary — the dominant bytes of the job — must cross exactly ONE
@@ -142,7 +93,8 @@ def test_html_crosses_exactly_one_shuffle_per_wave(spark, pages_parquet):
     version-dedup agg is that one exchange; the agg reuses its partitioning,
     the elected-side left join shuffles only slim frontier columns, and the
     parse pass inherits the partitions. Mirrors the engine chain at
-    crawl.py (matched → latest_rows → fetched → parsed)."""
+    crawl.py (matched → latest_rows → fetched → parsed). Also guards the
+    counter against the max_by partial-buffer smuggling hazard."""
     from sitecheck_spark.plans.checks import shuffle_exchanges_carrying
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -171,73 +123,13 @@ def test_html_crosses_exactly_one_shuffle_per_wave(spark, pages_parquet):
         # and the one exchange is the url-hash repartition, so the dedup agg
         # and the parse stage are co-partitioned with it
         assert "hashpartitioning(url" in carrying[0], carrying[0]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_html_single_shuffle_bucketed_shuffle_fetch(spark):
-    """Same single-html-shuffle contract for the bucketed SHUFFLE fetch path
-    (the at-scale configuration — a 10^10-URL elected set cannot broadcast):
-    the join's Ensure-exchange of the pages side is the ONE html shuffle
-    (landing in the elected side's pre-partitioning), the version-dedup agg
-    on the join keys reuses it, the elected left join re-derives the bucket
-    and shuffles only slim columns, DPP still prunes the scan. Also guards
-    the counter against the max_by partial-buffer smuggling hazard."""
-    import tempfile
-
-    from sitecheck_spark.plans.checks import shuffle_exchanges_carrying
-    from sitecheck_spark.sources.catalog import (
-        PAGES_BUCKET_COL,
-        bucket_of,
-        read_pages_bucketed,
-        write_pages_bucketed,
-    )
-
-    d = tempfile.mkdtemp() + "/pages_bucketed_sx"
-    src = spark.createDataFrame(make_pages_pdf(60), PAGES_SCHEMA)
-    write_pages_bucketed(src, d, n_buckets=8)
-    pages, n_buckets = read_pages_bucketed(spark, d)
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        pages_slim = pages.select("url", "warc_ts", "html", PAGES_BUCKET_COL)
-        elected = spark.createDataFrame(
-            [("https://big.example.com/p/0.html", "big.example.com", 0, 0.0,
-              None, 0)],
-            "url string, netloc string, depth int, priority double, "
-            "referrer string, redirects int",
-        ).filter(F.col("depth") <= 5)
-        keys = [PAGES_BUCKET_COL, "url"]
-        e_urls = (
-            elected.select("url")
-            .withColumn(PAGES_BUCKET_COL, bucket_of(F.col("url"), n_buckets))
-            .repartition(6, *keys)
-        )
-        matched = pages_slim.join(e_urls, keys)
-        latest = matched.groupBy(*keys).agg(
-            F.max_by("html", F.struct("warc_ts", F.md5("html"))).alias("html")
-        )
-        fetched = (
-            elected.withColumn(PAGES_BUCKET_COL,
-                               bucket_of(F.col("url"), n_buckets))
-            .join(latest, keys, "left")
-            .drop(PAGES_BUCKET_COL)
-        )
-        parsed_input = fetched.filter(F.col("html").isNotNull()).select(
-            "url", "netloc", "depth", "priority", "referrer", "redirects", "html"
-        )
-        plan = formatted_plan(parsed_input)
-        assert "dynamicpruning" in plan.lower(), plan
-        carrying = shuffle_exchanges_carrying(parsed_input, "html")
-        assert len(carrying) == 1, plan
-        # negative control: aggregating on url alone would re-shuffle the
-        # max_by buffer (html bytes under a fresh attribute) — the counter
-        # must see through that
+        # negative control: without the repartition the dedup agg's own
+        # exchange shuffles the max_by partial buffer (html bytes under a
+        # fresh attribute) — the counter must see through that
         bad = matched.groupBy("url").agg(
             F.max_by("html", F.struct("warc_ts", F.md5("html"))).alias("html")
         )
-        assert len(shuffle_exchanges_carrying(bad, "html")) == 2
+        assert len(shuffle_exchanges_carrying(bad, "html")) == 1
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -324,9 +216,7 @@ def test_bucketed_table_crawl_equals_plain_crawl(spark):
     base = dict(budget_per_host=3, max_waves=4, n_shards=4, salt_buckets=2,
                 run_checkers=False)
     plain = crawl(spark, src, seeds, CrawlConfig(**base))
-    btable = crawl(spark, reread, seeds,
-                   CrawlConfig(**base, pages_prebucketed=True,
-                               broadcast_fetch=False))
+    btable = crawl(spark, reread, seeds, CrawlConfig(**base))
     key = lambda res: sorted(
         (r["wave"], r["url"], r["status"]) for r in res.fetch_log.collect()
     )
@@ -338,41 +228,71 @@ def test_bucketed_table_crawl_equals_plain_crawl(spark):
     btable.release()
 
 
-def test_sidecar_modulus_guard_beats_row_sampling(spark):
-    """The bucketed-layout modulus guard must use the sidecar's recorded
-    n_buckets (authoritative), not just a row sample: for half of all
-    hashes pmod(h, 2N) == pmod(h, N), so a corpus restricted to such urls
-    sails through any sample check with a doubled modulus while the fetch
-    join would read the wrong partitions. Corpus here is exactly that
-    adversarial restriction — only the sidecar can catch it."""
-    import tempfile as _tf
+def test_bucketed_on_url_reads_the_scan_partitioning(spark, pages_parquet,
+                                                     pages_btable):
+    """bucketed_on_url is true exactly for a scan hash-partitioned on url:
+    a bucketed table (filtered or not) — not plain parquet, a local frame,
+    or the same table with bucketing disabled. It launches no job."""
+    from sitecheck_spark.sources.catalog import bucketed_on_url
 
+    plain = spark.read.parquet(pages_parquet)  # schema inference runs a job
+    local = spark.createDataFrame(make_pages_pdf(5), PAGES_SCHEMA)
+
+    def probes():
+        assert bucketed_on_url(pages_btable)
+        assert bucketed_on_url(pages_btable.filter(F.col("lang") == "en")
+                               .select("url", "html"))
+        assert not bucketed_on_url(plain)
+        assert not bucketed_on_url(local)
+        spark.conf.set("spark.sql.sources.bucketing.enabled", "false")
+        try:
+            assert not bucketed_on_url(spark.table("pages_bt_fetch_rereg"))
+        finally:
+            spark.conf.unset("spark.sql.sources.bucketing.enabled")
+
+    _, jobs = jobs_launched_by(spark, probes)
+    assert jobs == []
+
+
+@pytest.mark.parametrize("layout, html_shuffles", [
+    ("parquet", 1),
+    ("bucketed_table", 0),
+], ids=["parquet", "bucketed_table"])
+def test_engine_fetch_follows_the_pages_layout(spark, monkeypatch,
+                                               pages_parquet, pages_btable,
+                                               layout, html_shuffles):
+    """The crawl engine itself (not a hand-built copy of its chain) picks the
+    fetch join from the pages scan, with no fetch option set: plain parquet
+    broadcasts the elected urls and shuffles html once; a bucketed table
+    joins on its buckets and html crosses no exchange. Checked on each
+    wave's parsed frame as the engine checkpoints it."""
+    from sitecheck_spark import crawl as crawl_mod
     from sitecheck_spark.crawl import CrawlConfig, crawl
-    from sitecheck_spark.sources.catalog import (
-        bucket_of,
-        read_pages_bucketed,
-        write_pages_bucketed,
-    )
+    from sitecheck_spark.plans.checks import shuffle_exchanges_carrying
+    from sitecheck_spark.sources.corpus import make_seeds_pdf
 
-    src = (
-        spark.createDataFrame(make_pages_pdf(80), PAGES_SCHEMA)
-        .filter(bucket_of(F.col("url"), 16) == bucket_of(F.col("url"), 8))
-    )
-    assert src.count() > 10
-    d = _tf.mkdtemp() + "/pages_sidecar_guard"
-    write_pages_bucketed(src, d, n_buckets=8)
-    pages, _n = read_pages_bucketed(spark, d)
-    # every row agrees with modulus 16, so a sample check passes wrongly
-    agree = pages.filter(
-        bucket_of(F.col("url"), 16) != F.col("url_bucket")
-    ).count()
-    assert agree == 0
-    with pytest.raises(ValueError, match="sidecar"):
-        crawl(
-            spark, pages, ["https://big.example.com/p/0.html"],
-            CrawlConfig(max_waves=1, n_shards=4, salt_buckets=2,
-                        pages_buckets=16, run_checkers=False),
-        )
+    counts = []
+    labelled = crawl_mod._labelled
+
+    def spy(label, action):
+        frame = getattr(action, "__self__", None)
+        if label == "wave_chain" and "robots_allowed" not in frame.columns:
+            counts.append(len(shuffle_exchanges_carrying(frame, "html")))
+        return labelled(label, action)
+
+    pages = (spark.read.parquet(pages_parquet) if layout == "parquet"
+             else pages_btable)
+    monkeypatch.setattr(crawl_mod, "_labelled", spy)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        res = crawl(spark, pages, make_seeds_pdf().url.tolist(),
+                    CrawlConfig(budget_per_host=3, max_waves=2, n_shards=4,
+                                salt_buckets=2, run_checkers=False))
+        res.release()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert counts == [html_shuffles] * 2
 
 
 def test_register_bucketed_table_spec_mismatch_raises(spark):

@@ -324,7 +324,7 @@ def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
     # (written from parquet read back) plus a delta (written from the
     # wave's fresh rows) — one recorded schema for both
     dict(max_waves=4, seen_compact_every=2),
-], ids=["bloom", "exact-compacting"])
+], ids=["exact", "exact-compacting"])
 def test_frontier_counts_and_resume_reads_launch_no_jobs(spark, pages,
                                                          tmp_path, kw):
     """The next frontier's size is an observed row count on its write, not
