@@ -21,10 +21,10 @@ the matched html once. The zero-html-shuffle fetch needs a bucketed pages
 table (catalog.register_pages_bucketed_table) handed to crawl() directly.
 
 PATH RESTRICTIONS: --pages and --checkpoint-dir may be any Spark-readable
-URI (s3a://, hdfs://, file://) — the wave catalog routes its rename-commit
-protocol through the Hadoop FileSystem API for scheme'd bases (with the
-local-path fast path kept; on raw S3 use a consistent committer layer, as
-rename is copy-based there). --out must remain a LOCAL/POSIX path visible
+URI (s3a://, hdfs://, file://) or a plain path, which resolves against
+fs.defaultFS — the wave catalog runs its rename-commit protocol and its
+reads through the Hadoop FileSystem API for every base (on raw S3 use a
+consistent committer layer, as rename is copy-based there). --out must remain a LOCAL/POSIX path visible
 to the driver: the report summary writes with plain open(). A real Iceberg
 catalog replaces the parquet wave tables wholesale when its runtime jar is
 available (sources/catalog.py docstring).

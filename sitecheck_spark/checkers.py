@@ -194,9 +194,6 @@ def check_metadata(parsed: DataFrame) -> DataFrame:
     )
 
 
-SPELL_TOKEN_MODULE = "_spell_token"  # in-band token rows, never a finding
-
-
 def _spell_context_col(lt, word):
     """JVM twin of spelling_context() as a column expression over a
     lowercased-text column and a token column: substring around the first
@@ -211,32 +208,21 @@ def _spell_context_col(lt, word):
     )
 
 
-def _checker_structs(emit_tokens: bool = False,
-                     known_words: list[str] | None = None,
-                     inline_context: bool = False):
+def _checker_structs(known_words: list[str] | None = None):
     """The C2+C3+C5 per-row findings as ONE array-of-struct(module, detail)
-    column expression (+ the distinct spelling-candidate tokens when
-    emit_tokens). Shared by findings_pass and the crawl's wave-level fused
-    findings builder.
+    column expression, plus C4 spelling when `known_words` is given. Shared
+    by findings_pass and the crawl's wave-level fused findings builder.
 
-    known_words: when given (the dictionary, collected — it is broadcast-
-    small by construction, SURVEY.md §2.3 J3), the dictionary subtraction
-    happens HERE at the array level (array_except against the literal word
-    set, a per-row hash lookup) instead of downstream via an anti-join over
-    exploded token rows. Only the few UNKNOWN tokens per page ever become
-    rows — at the bench crawl that is ~2 rows/page instead of ~300, i.e.
-    the fused findings cache and the anti-join's input shrink ~100x. Same
-    set by construction: array_except(filter(tokens, len>=3), dict) ==
-    distinct tokens len>=3 minus dict (pytest-pinned vs check_spelling).
-
-    inline_context (requires known_words): emit finished module='spelling'
-    findings with the 'word: context' detail computed IN-ROW
-    (_spell_context_col) instead of in-band token rows. The unknown tokens
-    and their source text live in the same row, so re-attaching text via a
-    (url, wave, verb, post_data)-keyed join — a full-text shuffle plus a
-    second scan of the parsed cache per wave — was pure plumbing (guide
-    §2.4: remove shuffles outright). Byte-identical details: same locate/
-    substring rule either way (pytest-pinned vs check_spelling)."""
+    known_words: the dictionary, collected (it is broadcast-small by
+    construction, SURVEY.md §2.3 J3). The dictionary subtraction happens
+    HERE at the array level (array_except against the literal word set, a
+    per-row hash lookup), so only the few UNKNOWN tokens per page ever
+    become rows. Same set by construction: array_except(filter(tokens,
+    len>=3), dict) == distinct tokens len>=3 minus dict. Each unknown token
+    becomes a finished module='spelling' finding whose 'word: context'
+    detail is computed IN-ROW (_spell_context_col): the token and its
+    source text share a row, so no join re-attaches the text.
+    Byte-identical details to check_spelling (pytest-pinned)."""
     regex_arr = F.transform(
         # cheap contains() pre-gate: every EMAIL_SQL match contains '@', so
         # the expensive regex only runs on rows that can match at all
@@ -270,7 +256,7 @@ def _checker_structs(emit_tokens: bool = False,
         lambda i: F.struct(F.lit("metadata").alias("module"), i.alias("detail")),
     )
     arr = F.concat(regex_arr, comment_arr, meta_arr)
-    if emit_tokens:
+    if known_words is not None:
         candidates = F.filter(
             F.array_distinct(
                 F.regexp_extract_all(
@@ -279,39 +265,30 @@ def _checker_structs(emit_tokens: bool = False,
             ),
             lambda t: F.length(t) >= 3,
         )
-        if known_words is not None:
-            # array_except is distinct-by-definition, so the inner
-            # array_distinct above is redundant on this path but kept for
-            # expression-shape parity with the anti-join path
-            candidates = F.array_except(
-                candidates, F.array(*[F.lit(w) for w in known_words])
-            )
-        if inline_context and known_words is not None:
-            # after the dictionary subtraction `candidates` holds ~a few
-            # unknown tokens per page, so the per-element lower()+locate()
-            # below runs on O(few) elements — not the inlined-regex hazard
-            # _bound_words documents (its input array is evaluated once)
-            lt = F.lower(F.col("extracted_text"))
-            token_arr = F.transform(
-                candidates,
-                lambda t: F.struct(
-                    F.lit("spelling").alias("module"),
-                    F.concat(t, F.lit(": "),
-                             _spell_context_col(lt, t)).alias("detail"),
-                ),
-            )
-        else:
-            token_arr = F.transform(
-                candidates,
-                lambda t: F.struct(
-                    F.lit(SPELL_TOKEN_MODULE).alias("module"), t.alias("detail")
-                ),
-            )
+        # array_except is distinct-by-definition, so the inner
+        # array_distinct above is redundant, but kept: it is the expression
+        # the golden-checked crawl runs
+        candidates = F.array_except(
+            candidates, F.array(*[F.lit(w) for w in known_words])
+        )
+        # after the dictionary subtraction `candidates` holds ~a few
+        # unknown tokens per page, so the per-element lower()+locate()
+        # below runs on O(few) elements — not the inlined-regex hazard
+        # _bound_words documents (its input array is evaluated once)
+        lt = F.lower(F.col("extracted_text"))
+        token_arr = F.transform(
+            candidates,
+            lambda t: F.struct(
+                F.lit("spelling").alias("module"),
+                F.concat(t, F.lit(": "),
+                         _spell_context_col(lt, t)).alias("detail"),
+            ),
+        )
         arr = F.concat(arr, token_arr)
     return arr
 
 
-def findings_pass(parsed: DataFrame, emit_tokens: bool = False) -> DataFrame:
+def findings_pass(parsed: DataFrame) -> DataFrame:
     """C2+C3+C5 fused into ONE scan of the parsed table: returns
     (module, url, wave, detail) rows — the exact multiset the three
     separate builders produce (pytest-pinned equality).
@@ -322,25 +299,11 @@ def findings_pass(parsed: DataFrame, emit_tokens: bool = False) -> DataFrame:
     cache-read bytes were the second-largest stage group in the round-4
     N-vs-4N scaling tables (ckpt_findings: 44.7 GB input, 1.72x inflation).
     The three pure-JVM checkers are per-row array builders, so one scan
-    emits them all; spelling keeps its dictionary join.
-
-    emit_tokens=True additionally emits one module=SPELL_TOKEN_MODULE row
-    per distinct candidate spelling token (lowercase, len >= 3) per page —
-    the exact token set check_spelling explodes — and carries the request
-    identity columns (verb, post_data when present) so the C4 pipeline can
-    anti-join + re-attach text without its own scan of the parsed cache
-    (findings_with_spelling)."""
-    arr = _checker_structs(emit_tokens)
-    extra_cols: list[str] = []
-    if emit_tokens:
-        extra_cols = [c for c in ("verb", "post_data") if c in parsed.columns]
+    emits them all."""
     return (
-        parsed.select(
-            "url", "wave", *extra_cols,
-            F.explode(arr).alias("f"),
-        )
+        parsed.select("url", "wave", F.explode(_checker_structs()).alias("f"))
         .select(
-            F.col("f.module").alias("module"), "url", "wave", *extra_cols,
+            F.col("f.module").alias("module"), "url", "wave",
             F.col("f.detail").alias("detail"),
         )
     )
@@ -389,16 +352,15 @@ def wave_findings_pass(
     Collecting the dictionary is the same smallness assumption its
     broadcast already made, enforced by collect_dictionary's cap.
 
-    r7: the spelling CONTEXT is also computed in-row (_checker_structs
-    inline_context): the unknown token and its source text share a row, so
+    r7: the spelling CONTEXT is also computed in-row (_checker_structs):
+    the unknown token and its source text share a row, so
     the former 'word: context' re-attach — a full-text shuffle join plus a
     SECOND scan of the parsed cache per wave, plus a persisted in-band
     token table — was pure plumbing. The whole wave findings job is now
     ONE scan of the parsed cache with zero exchanges before the
     checkpoint."""
-    emit_tokens = checkers and dictionary is not None
     dict_words: list[str] | None = None
-    if emit_tokens:
+    if checkers and dictionary is not None:
         if isinstance(dictionary, (list, tuple)):
             dict_words = sorted(set(dictionary))
         else:
@@ -428,8 +390,7 @@ def wave_findings_pass(
         # parse fields
         chk = F.transform(
             F.filter(
-                _checker_structs(emit_tokens, known_words=dict_words,
-                                 inline_context=True),
+                _checker_structs(dict_words),
                 lambda _s: F.col("status") == 200,
             ),
             lambda s: F.struct(s["module"].alias("module"),
@@ -448,59 +409,28 @@ def wave_findings_pass(
     return fused
 
 
-def findings_with_spelling(
-    parsed: DataFrame, dictionary: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """C2+C3+C5+C4 sharing ONE scan of the parsed cache. Returns
-    (findings(module, url, wave, detail), cache_handle) — the caller
-    unpersists the handle after the findings are materialized.
-
-    The fused scan emits the JVM-checker findings AND the distinct spelling
-    candidate tokens as slim rows (persisted — orders of magnitude smaller
-    than the parsed table); the dictionary anti-join runs on those cached
-    rows, and only the text re-attach for surviving misspellings re-reads
-    the parsed cache's extracted_text column. Net: 2 parsed-cache scans per
-    wave (fused + re-attach) instead of the previous 3 (fused + token
-    explode + re-attach). Row-for-row equal to
-    findings_pass(parsed) ∪ check_spelling(parsed, dictionary)
-    (pytest-pinned)."""
-    fused = findings_pass(parsed, emit_tokens=True).persist()
-    base = fused.filter(F.col("module") != SPELL_TOKEN_MODULE).select(
-        "module", "url", "wave", "detail"
-    )
-    req = [c for c in ("url", "wave", "verb", "post_data") if c in fused.columns]
-    tokens = fused.filter(F.col("module") == SPELL_TOKEN_MODULE).select(
-        *req, F.col("detail").alias("word")
-    )
-    unknown = tokens.join(F.broadcast(dictionary), "word", "left_anti")
-    text = parsed.select(*req, F.lower("extracted_text").alias("_lt"))
-    pos = F.expr("locate(word, _lt)")
-    ctx = F.substring(
-        F.col("_lt"),
-        F.greatest(F.lit(1), pos - F.lit(SPELL_CONTEXT)),
-        F.length("word") + F.lit(2 * SPELL_CONTEXT),
-    )
-    spelling = unknown.join(text, req).select(
-        F.lit("spelling").alias("module"), "url", "wave",
-        F.concat(F.col("word"), F.lit(": "), ctx).alias("detail"),
-    )
-    return base.unionByName(spelling), fused
-
-
-def check_readability(parsed: DataFrame) -> DataFrame:
-    """C7: Flesch score from built-in column expressions (no Python)."""
-    parsed = parsed.withColumn(
+def with_flesch(df: DataFrame, text: str) -> DataFrame:
+    """`df` plus n_words, n_sentences and flesch: the Flesch reading ease
+    of column `text` from built-in column expressions (no Python), the
+    JVM twin of readability() — flesch is null when `text` has no words.
+    The one builder behind check_readability (C7) and
+    queries.q_readability."""
+    df = df.withColumn(
         "_words",  # materialized: HOF lambdas below must not inline the regex
-        F.regexp_extract_all(F.lower("extracted_text"), F.lit(TOKEN_SQL), F.lit(0)),
+        F.regexp_extract_all(F.lower(text), F.lit(TOKEN_SQL), F.lit(0)),
     )
     words = F.col("_words")
     n_words = F.size(words)
     n_sentences = F.greatest(
-        F.lit(1), F.size(F.regexp_extract_all("extracted_text", F.lit("[.!?]"), F.lit(0)))
+        F.lit(1),
+        F.size(F.regexp_extract_all(text, F.lit(SENTENCE_RE.pattern), F.lit(0))),
     )
     syllable_counts = F.transform(
         words,
-        lambda w: F.greatest(F.lit(1), F.size(F.regexp_extract_all(w, F.lit("[aeiouy]+"), F.lit(0)))),
+        lambda w: F.greatest(
+            F.lit(1),
+            F.size(F.regexp_extract_all(w, F.lit(VOWEL_GROUP_RE.pattern), F.lit(0))),
+        ),
     )
     n_syllables = F.aggregate(syllable_counts, F.lit(0), lambda a, b: a + b)
     score = (
@@ -508,9 +438,16 @@ def check_readability(parsed: DataFrame) -> DataFrame:
         - F.lit(1.015) * (n_words.cast("double") / n_sentences.cast("double"))
         - F.lit(84.6) * (n_syllables.cast("double") / n_words.cast("double"))
     )
-    return parsed.select(
-        "url",
-        "wave",
-        F.when(n_words > 0, score).alias("flesch_score"),
+    return df.select(
+        "*",
         n_words.alias("n_words"),
+        n_sentences.alias("n_sentences"),
+        F.when(n_words > 0, score).alias("flesch"),
+    ).drop("_words")
+
+
+def check_readability(parsed: DataFrame) -> DataFrame:
+    """C7: (url, wave, flesch_score, n_words) per parsed page."""
+    return with_flesch(parsed, "extracted_text").select(
+        "url", "wave", F.col("flesch").alias("flesch_score"), "n_words"
     )

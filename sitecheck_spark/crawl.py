@@ -28,9 +28,10 @@ become POST requests crawled independently of their GET twins.
                      join output is never cached); the only place html is
                      ever read (column pruning, SURVEY.md §4); parsed is
                      checkpointed
-      5. checkers  = DataFrame builders over parsed (C2..C5, C7), all JVM
-                     checkers + the spelling token explode fused into one
-                     scan of the parsed checkpoint
+      5. checkers  = DataFrame builders over parsed (C2..C5): every
+                     checker, spelling's dictionary subtraction and context
+                     included, fused into one scan of the parsed checkpoint
+                     (C7 readability is not a crawl checker)
       6. cand      = explode(outlinks) ∪ meta-refresh targets (hop-capped
                      redirect chains) -> ext/domain/depth filters ->
                      groupBy(url).min(struct(depth, referrer, redirects))
@@ -124,7 +125,7 @@ class CrawlConfig:
 class CrawlResult:
     fetch_log: DataFrame
     findings: DataFrame
-    seen: DataFrame          # (url, url_hash, shard)
+    seen: DataFrame          # (url, verb, post_data, url_hash, shard)
     waves: int = 0
     metrics: list[dict] = field(default_factory=list)
     _cached: list = field(default_factory=list, repr=False)
@@ -903,10 +904,8 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
     frontier/seen row. Both callers satisfy it: the candidates are grouped
     by request identity and the seeds are a sorted set.
 
-    Accepts either the long form (aggregated here) or a pre-aggregated
-    `_rules` DataFrame (the crawl loop checkpoints the aggregate once)."""
-    if "_rules" not in rules.columns:
-        rules = _rules_array(rules)
+    `rules` is the (netloc, _rules) form _rules_array builds (the crawl
+    loop checkpoints it once per crawl)."""
     first_hit = F.get(
         F.filter(
             F.col("_rules"),

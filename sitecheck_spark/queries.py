@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sitecheck_spark.checkers import with_flesch
 from sitecheck_spark.functions import textstats
 from sitecheck_spark.operators import dedup, similarity
 
@@ -798,33 +799,10 @@ def q_meta_lengths(spark, sf_dir):
        WHERE len(regexp_extract_all(lower(text), '[a-z]+')) > 0""",
 )
 def q_readability(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_words",  # materialized: the syllable transform must not inline the regex
-        F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), F.lit(0)),
-    )
-    words = F.col("_words")
-    n_words = F.size(words)
-    n_sentences = F.greatest(
-        F.lit(1), F.size(F.regexp_extract_all("text", F.lit("[.!?]"), F.lit(0)))
-    )
-    syl = F.aggregate(
-        F.transform(
-            words,
-            lambda w: F.greatest(
-                F.lit(1), F.size(F.regexp_extract_all(w, F.lit("[aeiouy]+"), F.lit(0)))
-            ),
-        ),
-        F.lit(0),
-        lambda a, b: a + b,
-    )
-    flesch = (
-        F.lit(206.835)
-        - F.lit(1.015) * (n_words.cast("double") / n_sentences.cast("double"))
-        - F.lit(84.6) * (syl.cast("double") / n_words.cast("double"))
-    )
-    return docs.filter(n_words > 0).select(
-        "doc_id", n_words.alias("n_words"), n_sentences.alias("n_sentences"),
-        flesch.alias("flesch"),
+    return (
+        with_flesch(_t(spark, sf_dir, "documents"), "text")
+        .filter("n_words > 0")
+        .select("doc_id", "n_words", "n_sentences", "flesch")
     )
 
 

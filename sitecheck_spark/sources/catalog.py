@@ -13,9 +13,13 @@ Iceberg catalog drops in — snapshot commit replaces the manifest rename, and
 no Iceberg runtime jar exists in this container, so parquet it is):
 
     1. write each table to   <base>/.tmp/<uuid>/
-    2. os.rename into place  <base>/<table>/wave=<k>/
-    3. write manifest JSON to <base>/.manifest.tmp, fsync,
-       os.rename -> <base>/manifest.json        <- THE commit point
+    2. rename into place     <base>/<table>/wave=<k>/
+    3. write manifest JSON to <base>/.manifest.tmp, hsync,
+       rename -> <base>/manifest.json          <- THE commit point
+
+Every step, for every base (plain path or URI), runs through the Hadoop
+FileSystem API; on the local FS, through its raw FS, whose stream makes
+the hsync a real fsync.
 
 Steps 1-2 run for all of a wave's tables at once, one thread per table
 (run_concurrently), so a commit costs the slowest write, not the sum. The
@@ -36,12 +40,11 @@ from __future__ import annotations
 
 import functools
 import json
-import os
-import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, TypeVar
 
+from py4j.java_gateway import is_instance_of
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,10 +57,16 @@ MANIFEST = "manifest.json"
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) via the JVM Hadoop FS API — speaks every
-    Spark-readable URI scheme (file:, hdfs:, s3a:, ...), unlike os.path."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    Spark-readable URI scheme (file:, hdfs:, s3a:, ...), and resolves a
+    plain path against fs.defaultFS as Spark's writer does. For a
+    ChecksumFileSystem (the local FS) it is the raw FS beneath: the
+    checksummed stream reports no hsync capability, so its hsync() only
+    flushes, and the raw FS neither writes nor checks .crc sidecars."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if is_instance_of(spark.sparkContext._gateway, fs,
+                      "org.apache.hadoop.fs.ChecksumFileSystem"):
+        fs = fs.getRawFileSystem()
     return fs, hpath
 
 
@@ -267,12 +276,6 @@ STATE_TABLES = ("frontier", "seen")
 DELTA_TABLES = ("fetch_log", "findings")
 
 
-def _has_scheme(path: str) -> bool:
-    import re
-
-    return bool(re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path))
-
-
 def _nullable(dt: DataType) -> DataType:
     """`dt` with every field, element and value nullable: the schema a
     parquet read of data written with `dt` reports."""
@@ -319,18 +322,20 @@ def run_concurrently(
 class WaveCatalog:
     """Wave-granular checkpoint store with an atomic rename-commit manifest.
 
-    `base_dir` may be a plain local path (fast path: os/shutil) or any
-    Spark-readable URI (file://, hdfs://, s3a://, ...) — URI bases route
-    every write (table rename-into-place, manifest tmp+rename) through the
-    JVM Hadoop FileSystem API, the same seam the read side
-    (read_deltas_through) already uses, so the commit protocol runs
-    wherever the cluster's checkpoints live, not just on the driver's
-    local disk. Caveat inherited from the FS: rename is
-    atomic on HDFS/file, copy-based on raw S3 (use a consistent committer
-    layer there, as any Spark job must).
+    `base_dir` is a plain path or any Spark-readable URI (file://, hdfs://,
+    s3a://, ...). Every read and write — table rename-into-place, manifest
+    tmp+hsync+rename, manifest read — goes through the JVM Hadoop
+    FileSystem API (_hadoop_fs), one code path for every base. A plain path
+    resolves against fs.defaultFS, as Spark's own writer resolves it, so the
+    driver's renames and the executors' writes see the same filesystem.
+    Under the local FS the catalog uses the raw FS beneath its checksums,
+    whose stream honors hsync: the manifest is hsync'd to disk before the
+    rename that commits it. Caveat inherited from the FS: rename is atomic
+    on HDFS/file, copy-based on raw S3 (use a consistent committer layer
+    there, as any Spark job must).
 
-    `spark` is required for URI bases (the Hadoop FS lives in the JVM);
-    the local fast path works without it.
+    `spark` defaults to the active SparkSession; with none, the catalog
+    raises (the Hadoop FS lives in the JVM).
 
     Single writer: one crawl() at a time commits to a base directory. The
     instance therefore reads the manifest from the store once, on first use
@@ -342,41 +347,37 @@ class WaveCatalog:
     fields nullable, as any parquet read returns them), so reads of
     committed tables pass it to the parquet reader and launch no
     schema-inference job. Entries from before schemas were recorded fall
-    back to inference.
+    back to inference. Reads follow the lineage only: a wave without a
+    lineage entry for the table read raises.
     """
 
     def __init__(self, base_dir: str, spark: SparkSession | None = None):
         self.base = base_dir.rstrip("/")
-        self.spark = spark
-        self.remote = _has_scheme(self.base)
-        self._manifest: dict | None = None
-        self._loaded = False
-        if not self.remote:
-            os.makedirs(base_dir, exist_ok=True)
-        else:
-            fs, hpath = self._fs(self.base)
-            fs.mkdirs(hpath)
-
-    def _fs(self, path: str):
+        self.spark = spark or SparkSession.getActiveSession()
         if self.spark is None:
             raise ValueError(
-                f"WaveCatalog base {self.base!r} is a URI — pass the "
-                f"SparkSession so the Hadoop FileSystem API is reachable"
+                f"WaveCatalog base {self.base!r}: no active SparkSession — "
+                f"pass the SparkSession so the Hadoop FileSystem API is "
+                f"reachable"
             )
-        return _hadoop_fs(self.spark, path)
+        self._manifest: dict | None = None
+        self._loaded = False
+        # every catalog path lives under the base, on its FS; the Path class
+        # is resolved once (each JVM-view lookup is a Py4J round trip)
+        self._fs, base_path = _hadoop_fs(self.spark, self.base)
+        self._path = self.spark._jvm.org.apache.hadoop.fs.Path
+        self._fs.mkdirs(base_path)
 
     # -- manifest ----------------------------------------------------------
 
     def _manifest_path(self) -> str:
-        if self.remote:
-            return self.base + "/" + MANIFEST
-        return os.path.join(self.base, MANIFEST)
+        return self.base + "/" + MANIFEST
 
-    def _read_remote_text(self, path: str) -> str | None:
-        fs, hpath = self._fs(path)
-        if not fs.exists(hpath):
+    def _read_text(self, path: str) -> str | None:
+        hpath = self._path(path)
+        if not self._fs.exists(hpath):
             return None
-        stream = fs.open(hpath)
+        stream = self._fs.open(hpath)
         try:
             return self.spark._jvm.org.apache.commons.io.IOUtils.toString(
                 stream, "UTF-8"
@@ -398,25 +399,18 @@ class WaveCatalog:
         return self._manifest
 
     def _load_manifest(self) -> dict | None:
-        if not self.remote:
-            try:
-                with open(self._manifest_path()) as f:
-                    return json.load(f)
-            except FileNotFoundError:
-                return None
-        body = self._read_remote_text(self._manifest_path())
+        body = self._read_text(self._manifest_path())
         if body is not None:
             return json.loads(body)
-        # The remote delete+rename fallback in commit_wave has a crash
-        # window between the delete and the rename where no manifest exists
-        # — but the fully-written, hsync'd .manifest.tmp does. Recover from
-        # it rather than silently discarding every committed wave (a clean
+        # The delete+rename fallback in commit_wave has a crash window
+        # between the delete and the rename where no manifest exists — but
+        # the fully-written, hsync'd .manifest.tmp does. Recover from it
+        # rather than silently discarding every committed wave (a clean
         # restart is correct but defeats the checkpoint store's purpose in
         # exactly the crash it exists to survive). Only a tmp that parses
         # AND has the manifest's shape is trusted: a torn tmp (mid-write
         # crash) or a foreign JSON file reads as no manifest.
-        tmp = self.base + "/.manifest.tmp"
-        body = self._read_remote_text(tmp)
+        body = self._read_text(self.base + "/.manifest.tmp")
         if body is None:
             return None
         try:
@@ -434,12 +428,11 @@ class WaveCatalog:
         so later readers take the normal path. Only the single writer calls
         this: reads never write the store, because a reader's rename could
         land in the middle of the writer's own delete+rename."""
-        if not self.remote or self.manifest is None:
+        if self.manifest is None:
             return
-        fs, mpath = self._fs(self._manifest_path())
-        if not fs.exists(mpath):
-            _, tpath = self._fs(self.base + "/.manifest.tmp")
-            fs.rename(tpath, mpath)
+        mpath = self._path(self._manifest_path())
+        if not self._fs.exists(mpath):
+            self._fs.rename(self._path(self.base + "/.manifest.tmp"), mpath)
 
     def last_committed_wave(self) -> int | None:
         m = self.manifest
@@ -448,54 +441,47 @@ class WaveCatalog:
     # -- table IO ----------------------------------------------------------
 
     def _table_dir(self, name: str, wave: int) -> str:
-        if self.remote:
-            return f"{self.base}/{name}/wave={wave}"
-        return os.path.join(self.base, name, f"wave={wave}")
+        return f"{self.base}/{name}/wave={wave}"
 
     def _write_table(self, df: DataFrame, name: str, wave: int) -> dict:
         """Write `df` to a tmp dir and rename it into <name>/wave=<k>/;
         returns the lineage entry (path, n_files, bytes, schema)."""
         dest = self._table_dir(name, wave)
-        schema = _nullable(df.schema).json()
-        if self.remote:
-            tmp = f"{self.base}/.tmp/{uuid.uuid4().hex}"
-            df.write.mode("overwrite").parquet(tmp)
-            jvm = df.sparkSession._jvm
-            fs, dpath = _hadoop_fs(df.sparkSession, dest)
-            if fs.exists(dpath):  # orphan from a killed uncommitted wave
-                fs.delete(dpath, True)
-            fs.mkdirs(dpath.getParent())
-            if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dpath):
-                raise IOError(f"rename {tmp} -> {dest} failed")
-            sizes = [
-                st.getLen() for st in fs.listStatus(dpath)
-                if st.getPath().getName().endswith(".parquet")
-            ]
-            return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes),
-                    "schema": schema}
-        tmp = os.path.join(self.base, ".tmp", uuid.uuid4().hex)
+        tmp = f"{self.base}/.tmp/{uuid.uuid4().hex}"
         df.write.mode("overwrite").parquet(tmp)
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
-        if os.path.exists(dest):  # orphan from a killed uncommitted wave
-            shutil.rmtree(dest)
-        os.rename(tmp, dest)
+        fs, dpath = self._fs, self._path(dest)
+        if fs.exists(dpath):  # orphan from a killed uncommitted wave
+            fs.delete(dpath, True)
+        fs.mkdirs(dpath.getParent())
+        if not fs.rename(self._path(tmp), dpath):
+            raise IOError(f"rename {tmp} -> {dest} failed")
         sizes = [
-            e.stat().st_size for e in os.scandir(dest) if e.name.endswith(".parquet")
+            st.getLen() for st in fs.listStatus(dpath)
+            if st.getPath().getName().endswith(".parquet")
         ]
         return {"path": dest, "n_files": len(sizes), "bytes": sum(sizes),
-                "schema": schema}
+                "schema": _nullable(df.schema).json()}
 
-    def _lineage(self, name: str, wave: int) -> dict | None:
-        return (self.manifest or {}).get("waves", {}).get(str(wave), {}) \
+    def _lineage(self, name: str, wave: int) -> dict:
+        """Wave `wave`'s lineage entry for table `name`; raises when the
+        manifest has none (reads follow the lineage, never a probe)."""
+        ent = (self.manifest or {}).get("waves", {}).get(str(wave), {}) \
             .get("lineage", {}).get(name)
+        if ent is None:
+            raise ValueError(
+                f"checkpoint {self.base!r}: wave {wave} has no lineage entry "
+                f"for table {name!r} — the manifest does not describe this "
+                f"checkpoint; start a fresh checkpoint_dir"
+            )
+        return ent
 
     @staticmethod
     def _read_parquet(
-        spark: SparkSession, paths: list[str], entries: list[dict | None]
+        spark: SparkSession, paths: list[str], entries: list[dict]
     ) -> DataFrame:
         """Parquet read of committed paths, with the recorded schema when
         every entry carries the same one (no schema-inference job)."""
-        schemas = {(e or {}).get("schema") for e in entries}
+        schemas = {e.get("schema") for e in entries}
         reader = spark.read
         if len(schemas) == 1 and None not in schemas:
             reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
@@ -503,7 +489,7 @@ class WaveCatalog:
 
     def read_table(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         ent = self._lineage(name, wave)
-        return self._read_parquet(spark, [self._table_dir(name, wave)], [ent])
+        return self._read_parquet(spark, [ent["path"]], [ent])
 
     def read_state(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         """Full state of `name` as of `wave`: the newest kind="full" snapshot
@@ -515,38 +501,18 @@ class WaveCatalog:
         entries: list[dict] = []
         for k in range(wave, -1, -1):
             ent = self._lineage(name, k)
-            if ent is None:
-                continue
             entries.append(ent)
             if ent.get("kind", "full") == "full":
                 break
-        if not entries:  # manifest predates lineage bookkeeping
-            return self.read_table(spark, name, wave)
         entries.reverse()
         return self._read_parquet(spark, [e["path"] for e in entries], entries)
 
     def read_deltas_through(self, spark: SparkSession, name: str, wave: int) -> DataFrame:
         """Per-wave delta tables (fetch_log / findings) unioned through
         `wave`. Paths come from the manifest lineage — the commit point, so
-        orphaned dirs from a killed wave are never read — with a Hadoop-FS
-        existence probe (remote-URI-safe, unlike os.path) only for waves
-        predating lineage bookkeeping."""
-        paths: list[str] = []
-        entries: list[dict | None] = []
-        fs = None
-        for k in range(wave + 1):
-            ent = self._lineage(f"{name}_delta", k)
-            if ent is not None:
-                paths.append(ent["path"])
-                entries.append(ent)
-                continue
-            p = self._table_dir(name, k)
-            if fs is None:
-                fs, _ = _hadoop_fs(spark, p)
-            if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(p)):
-                paths.append(p)
-                entries.append(None)
-        return self._read_parquet(spark, paths, entries)
+        orphaned dirs from a killed wave are never read."""
+        entries = [self._lineage(f"{name}_delta", k) for k in range(wave + 1)]
+        return self._read_parquet(spark, [e["path"] for e in entries], entries)
 
     # -- commit ------------------------------------------------------------
 
@@ -571,7 +537,6 @@ class WaveCatalog:
         callable: it runs once the tables are written, so it can read
         Observations attached to the written frames."""
         kinds = state_kinds or {}
-        spark = self.spark or next(iter({**state, **deltas}.values())).sparkSession
         jobs = {
             name: (ckpt_label(name, kinds.get(name)),
                    functools.partial(self._write_table, df, name, wave))
@@ -582,7 +547,7 @@ class WaveCatalog:
                 ckpt_label(name),
                 functools.partial(self._write_table, df, name, wave),
             )
-        lineage = run_concurrently(spark, jobs)
+        lineage = run_concurrently(self.spark, jobs)
         for name in state:
             lineage[name]["kind"] = kinds.get(name, "full")
         if callable(metrics):
@@ -595,24 +560,22 @@ class WaveCatalog:
         m["waves"] = {**m.get("waves", {}),
                       str(wave): {"lineage": lineage, "metrics": metrics or {}}}
         body = json.dumps(m, indent=1)
-        if self.remote:
-            # same tmp+rename commit point, through the Hadoop FS: hflush
-            # pushes the bytes to the FS before the rename makes them the
-            # manifest (hsync where the FS honors it).
-            fs, tpath = self._fs(self.base + "/.manifest.tmp")
-            out = fs.create(tpath, True)
-            try:
-                out.write(bytearray(body.encode("utf-8")))
-                try:
-                    out.hsync()
-                except Exception:
-                    out.hflush()
-            finally:
-                out.close()
+        # tmp + hsync + rename: the bytes are durable before the rename
+        # makes them the manifest
+        fs, tpath = self._fs, self._path(self.base + "/.manifest.tmp")
+        out = fs.create(tpath, True)
+        try:
+            out.write(bytearray(body.encode("utf-8")))
+            out.hsync()
+        finally:
+            out.close()
+        mpath = self._path(self._manifest_path())
+        # The local FS's rename replaces the manifest atomically (rename(2));
+        # HDFS and object stores refuse to rename onto an existing file.
+        if not fs.rename(tpath, mpath):
             jvm = self.spark._jvm
-            mpath = jvm.org.apache.hadoop.fs.Path(self._manifest_path())
             try:
-                # FileContext rename(OVERWRITE): atomic on HDFS/file — no
+                # FileContext rename(OVERWRITE): atomic on HDFS — no
                 # manifest-less window for a concurrent reader.
                 fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
                     tpath.toUri(), self.spark._jsc.hadoopConfiguration()
@@ -626,16 +589,7 @@ class WaveCatalog:
                 # delete+rename — a crash between the two leaves the valid
                 # .manifest.tmp behind, never a corrupt manifest.
                 if fs.exists(mpath):
-                    fs.delete(mpath, False)  # plain rename won't overwrite
+                    fs.delete(mpath, False)
                 if not fs.rename(tpath, mpath):
-                    raise IOError(
-                        f"manifest rename failed under {self.base}"
-                    )
-        else:
-            tmp = os.path.join(self.base, ".manifest.tmp")
-            with open(tmp, "w") as f:
-                f.write(body)
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(tmp, self._manifest_path())
+                    raise IOError(f"manifest rename failed under {self.base}")
         self._manifest, self._loaded = m, True

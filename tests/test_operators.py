@@ -564,24 +564,21 @@ def test_findings_pass_equals_separate_checkers(spark):
     assert {m for m, *_ in fused} == {"regex", "comments", "metadata"}
 
 
-def test_findings_with_spelling_equals_separate_checkers(spark):
-    """The one-scan C2+C3+C5+C4 builder (crawl's findings job when a
-    dictionary is present) must emit the exact multiset of
-    findings_pass(parsed) ∪ check_spelling(parsed, dictionary) — including
-    byte-identical spelling context details."""
+def test_check_readability_equals_pure_readability(spark):
+    """C7's column builder (checkers.with_flesch, also behind
+    q_readability) must equal the pure readability() row by row, exactly:
+    the parsed corpus texts plus edge cases (no words, no sentence mark,
+    mixed case, non-ASCII letters, digits only)."""
     from sitecheck_spark import checkers
     from sitecheck_spark.extract import PARSED_SCHEMA, parse_pages_batch
-    from sitecheck_spark.sources.corpus import make_dictionary_pdf, make_pages_pdf
+    from sitecheck_spark.sources.corpus import make_pages_pdf
 
     pages = spark.createDataFrame(
-        make_pages_pdf(60),
+        make_pages_pdf(40),
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    dictionary = spark.createDataFrame(make_dictionary_pdf())
-    parsed = (
-        pages.groupBy("url")
-        .agg(F.max_by("html", "warc_ts").alias("html"))
-        .select(
+    corpus = (
+        pages.select(
             "url", F.lit("h").alias("netloc"), F.lit(0).alias("wave"),
             F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
             F.lit("").alias("referrer"), F.lit(0).alias("redirects"),
@@ -589,19 +586,21 @@ def test_findings_with_spelling_equals_separate_checkers(spark):
         )
         .mapInPandas(parse_pages_batch, PARSED_SCHEMA)
     )
-    fused_df, handle = checkers.findings_with_spelling(parsed, dictionary)
-    got = [(r["module"], r["url"], r["wave"], r["detail"])
-           for r in fused_df.collect()]
-    handle.unpersist()
-    want = [(r["module"], r["url"], r["wave"], r["detail"])
-            for r in checkers.findings_pass(parsed).collect()]
-    for r in checkers.check_spelling(parsed, dictionary).collect():
-        want.append(("spelling", r["url"], r["wave"], r["detail"]))
-    assert sorted(got) == sorted(want)
-    # corpus must actually exercise the spelling path
-    assert any(m == "spelling" for m, *_ in got)
-    # no in-band token rows may leak into the findings
-    assert all(m != checkers.SPELL_TOKEN_MODULE for m, *_ in got)
+    texts = [r["extracted_text"] for r in corpus.collect()]
+    texts += ["", "   ", "1234 5678.", "no sentence mark here",
+              "Hello World. SHOUTING?! yes", "Crème brûlée, naïve café.",
+              "a e i o u y. rhythm."]
+    rows = [(f"u{i}", 0, t) for i, t in enumerate(texts)]
+    parsed = spark.createDataFrame(rows, "url string, wave int, extracted_text string")
+    got = {r["url"]: r["flesch_score"]
+           for r in checkers.check_readability(parsed).collect()}
+    assert len(got) == len(rows)
+    for url, _, text in rows:
+        assert got[url] == checkers.readability(text), (url, text)
+    # both branches exercised: scored texts (most) and wordless ones
+    scores = list(got.values())
+    assert None in scores
+    assert sum(s is not None for s in scores) > len(scores) // 2
 
 
 def test_wave_findings_pass_single_scan_equality(spark):

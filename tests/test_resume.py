@@ -89,10 +89,10 @@ def test_kill_and_resume_equals_uninterrupted(spark, pages, tmp_path,
 def test_kill_and_resume_with_file_uri_checkpoint(spark, pages, tmp_path,
                                                   baseline_run):
     """The commit protocol must run when checkpoint_dir is a Hadoop URI,
-    not just a local path: WaveCatalog routes table renames and the
-    manifest tmp+rename through the Hadoop FileSystem API for scheme'd
-    bases (the read side already did — X20), so a kill/resume cycle
-    against file:// must be byte-equal to the uninterrupted run."""
+    not just a local path: WaveCatalog routes table renames, the manifest
+    tmp+rename and every read through the Hadoop FileSystem API for every
+    base, so a kill/resume cycle against file:// must be byte-equal to the
+    uninterrupted run."""
     base_summary, base_waves = baseline_run
     seeds = make_seeds_pdf().url.tolist()
 
@@ -101,9 +101,6 @@ def test_kill_and_resume_with_file_uri_checkpoint(spark, pages, tmp_path,
     assert WaveCatalog(ckpt, spark).last_committed_wave() == 1
     # manifest really lives behind the URI (written via Hadoop FS)
     assert os.path.exists(str(tmp_path / "ckpt_uri" / "manifest.json"))
-    # URI base without a SparkSession must fail loudly, not fall back to os.*
-    with pytest.raises(ValueError, match="SparkSession"):
-        WaveCatalog(ckpt).read_manifest()
 
     resumed = crawl(spark, pages, seeds, _cfg(checkpoint_dir=ckpt))
     assert _summary(resumed) == base_summary
@@ -390,3 +387,121 @@ def test_lineage_schema_is_the_parquet_read_schema(spark, tmp_path):
     cat.commit_wave(1, {"t": read_back}, {}, state_kinds={"t": "delta"})
     assert cat.manifest["waves"]["1"]["lineage"]["t"]["schema"] == ent["schema"]
     assert cat.read_state(spark, "t", 1).count() == 6
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_catalog_without_spark_session_fails_loudly(tmp_path, scheme):
+    """With no SparkSession anywhere, WaveCatalog raises instead of falling
+    back to os.*: its every read and write goes through the Hadoop FS in
+    the JVM. Run in a fresh interpreter that never starts a JVM (inside
+    the suite a session is always active, and the catalog would use it)."""
+    import subprocess
+    import sys
+
+    base = scheme + str(tmp_path / "ckpt_nosession")
+    code = (
+        "import sys\n"
+        "from pyspark import SparkContext\n"
+        "from sitecheck_spark.sources.catalog import WaveCatalog\n"
+        "try:\n"
+        "    WaveCatalog(sys.argv[1])\n"
+        "except ValueError as e:\n"
+        "    assert 'SparkSession' in str(e), e\n"
+        "    assert SparkContext._active_spark_context is None\n"
+        "    print('raised')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code, base], cwd=root,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "raised"
+    assert not (tmp_path / "ckpt_nosession").exists()
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "file_uri"])
+def test_manifest_stream_reports_hsync(spark, tmp_path, monkeypatch, scheme):
+    """The stream that writes the manifest honors hsync, so the commit's
+    hsync is a durability point for a plain path and for file:// alike.
+    The local FS's checksummed stream reports no hsync capability (its
+    hsync() only flushes); the catalog writes through the raw FS beneath."""
+    from sitecheck_spark.sources import catalog as catalog_mod
+
+    capable = []
+    real_fs = catalog_mod._hadoop_fs
+
+    class Spy:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def create(self, *args):
+            out = self._fs.create(*args)
+            capable.append(out.hasCapability("hsync"))
+            return out
+
+    def spy_fs(s, path):
+        fs, hpath = real_fs(s, path)
+        return Spy(fs), hpath
+
+    monkeypatch.setattr(catalog_mod, "_hadoop_fs", spy_fs)
+    cat = WaveCatalog(scheme + str(tmp_path / "ckpt_hsync"), spark)
+    cat.commit_wave(0, {"t": spark.range(2)}, {})
+    assert capable == [True]
+    assert not (tmp_path / "ckpt_hsync" / ".manifest.json.crc").exists()
+
+
+def test_manifest_with_stale_checksum_sidecar_reads(spark, tmp_path):
+    """A file:// checkpoint whose manifest was written through the
+    checksummed local FS carries a .manifest.json.crc. The catalog's raw
+    rename replaces the manifest but not the sidecar, so a checksummed read
+    of the next manifest would fail on it: reads go through the raw FS."""
+    base = "file://" + str(tmp_path / "ckpt_crc")
+    cat = WaveCatalog(base, spark)
+    cat.commit_wave(0, {"t": spark.range(2)}, {})
+    jvm = spark._jvm
+    mpath = jvm.org.apache.hadoop.fs.Path(base + "/manifest.json")
+    checksummed = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    body = (tmp_path / "ckpt_crc" / "manifest.json").read_bytes()
+    out = checksummed.create(mpath, True)
+    out.write(bytearray(body))
+    out.close()
+    assert (tmp_path / "ckpt_crc" / ".manifest.json.crc").exists()
+
+    WaveCatalog(base, spark).commit_wave(1, {"t": spark.range(3)}, {},
+                                         state_kinds={"t": "delta"})
+    with pytest.raises(Exception, match="Checksum"):
+        stream = checksummed.open(mpath)
+        try:
+            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+    cat = WaveCatalog(base, spark)
+    assert cat.last_committed_wave() == 1
+    assert cat.read_state(spark, "t", 1).count() == 5
+
+
+def test_wave_without_lineage_fails_closed(spark, tmp_path):
+    """Reads follow the manifest lineage only. A wave whose lineage entry
+    is missing raises, naming the checkpoint, the table and the wave,
+    instead of probing the store for a directory the manifest does not
+    vouch for."""
+    ckpt = str(tmp_path / "ckpt_nolineage")
+    cat = WaveCatalog(ckpt, spark)
+    for k in range(2):
+        cat.commit_wave(k, {"t": spark.range(k + 1)},
+                        {"fetch_log": spark.range(k + 1)},
+                        state_kinds={"t": "full" if k == 0 else "delta"})
+    assert cat.read_deltas_through(spark, "fetch_log", 1).count() == 3
+
+    m = cat.read_manifest()
+    del m["waves"]["1"]["lineage"]["fetch_log_delta"]
+    del m["waves"]["1"]["lineage"]["t"]
+    assert os.path.isdir(os.path.join(ckpt, "fetch_log", "wave=1"))
+    with pytest.raises(ValueError) as err:
+        cat.read_deltas_through(spark, "fetch_log", 1)
+    for part in (ckpt, "'fetch_log_delta'", "wave 1"):
+        assert part in str(err.value)
+    with pytest.raises(ValueError, match="wave 1 .*'t'"):
+        cat.read_state(spark, "t", 1)

@@ -4,7 +4,12 @@ import pandas as pd
 import pytest
 
 from sitecheck_spark import robots as robots_mod
-from sitecheck_spark.crawl import _compile_rules_batches, _robots_gate, _RULES_SCHEMA
+from sitecheck_spark.crawl import (
+    _RULES_SCHEMA,
+    _compile_rules_batches,
+    _robots_gate,
+    _rules_array,
+)
 from sitecheck_spark.sources.corpus import ROBOTS_BODIES
 
 EXTRA_BODIES = {
@@ -38,7 +43,7 @@ def test_compiled_gate_equals_robotparser(spark):
     robots_df = spark.createDataFrame(
         pd.DataFrame({"netloc": list(bodies), "rules": list(bodies.values())})
     )
-    rules = robots_df.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
+    rules = _rules_array(robots_df.mapInPandas(_compile_rules_batches, _RULES_SCHEMA))
 
     rows = [
         (f"https://{nl}{path}", nl) for nl in bodies for path in PATHS
@@ -57,7 +62,7 @@ def test_missing_netloc_defaults_to_allow(spark):
     robots_df = spark.createDataFrame(
         pd.DataFrame({"netloc": ["known.example.com"], "rules": ["User-agent: *\nDisallow: /\n"]})
     )
-    rules = robots_df.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
+    rules = _rules_array(robots_df.mapInPandas(_compile_rules_batches, _RULES_SCHEMA))
     df = spark.createDataFrame(
         [("https://unknown.example.com/x", "unknown.example.com"),
          ("https://known.example.com/x", "known.example.com")],
