@@ -4,10 +4,22 @@ Implements CRAWL CONTRACT v3 (golden.py) Spark-first (SURVEY.md §3.2):
 request identity is the (verb, url, post_data) triple — method=post forms
 become POST requests crawled independently of their GET twins.
 
+crawl() has three parts:
+
+- Setup and resume: the seeds, the allow-list and the per-crawl tables
+  (_crawl_tables: budgets, rules, host components, the spelling dictionary
+  and the pages scan), then either the catalog's last committed wave or
+  the robots-gated seeds (_gate_seeds, wave 0 of the contract).
+- _wave: one wave's DataFrame program, steps 2-9 below. It writes nothing
+  and sets no conf; its only jobs are its two labelled checkpoints.
+- The loop: it scopes each wave's shuffle width, materializes what _wave
+  returns (step 10, the catalog commit in resumable mode), and releases
+  superseded state.
+
     seeds -> frontier(wave 0)
     per wave:
-      1. budgets   = robots crawl-delay -> per-netloc budget (join, broadcast
-                     when small)
+      1. budgets   = robots crawl-delay -> per-netloc budget, per crawl
+                     (each wave joins it; broadcast when small)
       2. elect     = two-phase salted top-budget per netloc window (W1/W2/J5:
                      phase 1 ranks within (netloc, salt) so one skew host
                      cannot pin a single reducer; phase 2 ranks the <= B*salts
@@ -143,6 +155,15 @@ class CrawlResult:
 
 
 FINDINGS_SCHEMA = "module string, url string, wave int, detail string, referrer string"
+_FRONTIER_COLS = ["url", "netloc", "depth", "priority", "referrer", "redirects",
+                  "verb", "post_data"]
+_FRONTIER_SCHEMA = ("url string, netloc string, depth int, priority double, "
+                    "referrer string, redirects int, verb string, post_data string")
+_LOG_COLS = ["url", "netloc", "wave", "depth", "priority", "referrer", "verb",
+             "post_data", "status", "content_len", "n_links"]
+_LOG_SCHEMA = ("url string, netloc string, wave int, depth int, priority double, "
+               "referrer string, verb string, post_data string, "
+               "status int, content_len long, n_links int")
 _EXT_PATTERN = "(?i)(?:" + "|".join(re.escape(e) for e in IGNORED_EXTENSIONS) + ")$"
 _ISIN_MAX_NETLOCS = 64  # above this, the allow-list joins instead of inlining
 _WAVE_ROWS_PER_PARTITION = 12_500  # frontier rows per wave-scoped shuffle partition
@@ -174,11 +195,17 @@ def latest_pages(pages: DataFrame) -> DataFrame:
 
 
 def robots_from_pages(pages: DataFrame) -> DataFrame:
-    """R1: robots.txt bodies live in the corpus itself."""
+    """R1: robots.txt bodies live in the corpus itself. One row per netloc,
+    hash-partitioned on netloc at the core count rather than the session's
+    shuffle width: the budgets and rules checkpoints keep this partitioning,
+    and every wave's election and gate joins shuffle the frontier to match
+    it, so a session at width 200 would otherwise pay 200-task stages in
+    every wave."""
     return (
         pages.filter(F.col("url").endswith("/robots.txt"))
         .groupBy(F.parse_url("url", F.lit("HOST")).alias("netloc"))
         .agg(F.max_by("text", F.struct("warc_ts", F.md5("text"))).alias("rules"))
+        .repartition(pages.sparkSession.sparkContext.defaultParallelism, "netloc")
     )
 
 
@@ -274,7 +301,6 @@ def crawl(
     pages: DataFrame,
     seeds: list[str] | DataFrame,
     config: CrawlConfig | None = None,
-    robots: DataFrame | None = None,
     dictionary: DataFrame | None = None,
     host_components: DataFrame | None = None,
 ) -> CrawlResult:
@@ -293,67 +319,17 @@ def crawl(
         seed_urls = list(seeds)
     seed_canon = sorted({u for u in (canonicalize(s) for s in seed_urls) if u})
     allowed = cfg.allowed_netlocs or sorted({netloc_of(u) for u in seed_canon})
-    # Small allow-lists inline as an `isin` literal (codegen-friendly); an
-    # open-web crawl with 10^5+ allowed hosts would bloat every wave's plan
-    # with a giant literal, so large lists become a broadcast semi-join.
-    allowed_df = None
-    if len(allowed) > _ISIN_MAX_NETLOCS:
-        allowed_df = F.broadcast(
-            spark.createDataFrame([(n,) for n in allowed], "netloc string")
-        )
-
-    # Fetch source: version dedup (as-of max warc_ts) happens per wave on the
-    # *matched* rows only — joining first and deduping after means the big
-    # html column is never shuffled corpus-wide or columnar-cached. The
-    # join's shape follows from the pages scan's partitioning (step 3 of the
-    # module docstring); planning it launches no job.
-    pages_slim = pages.select("url", "warc_ts", "html")
-    pages_bucketed = bucketed_on_url(pages_slim)
-    if robots is None:
-        robots = robots_from_pages(pages)
-    robots = robots.persist()
-
-    # budgets, rules, comp_map: checkpointed on first use, so a resume with
-    # no wave left to run launches no job
-    wave_tables = functools.cache(
-        lambda: _wave_tables(robots, cfg, host_components))
-
-    # Collect the spelling dictionary ONCE for all waves: checkers fold it
-    # into the fused findings scan as an array_except literal (checkers.py
-    # _checker_structs); over checkers.DICT_WORDS_CAP rows it raises.
-    dict_words = None
-    if dictionary is not None and cfg.run_checkers:
-        dict_words = collect_dictionary(dictionary)
-
-    frontier_cols = ["url", "netloc", "depth", "priority", "referrer",
-                     "redirects", "verb", "post_data"]
-    seeds_df = spark.createDataFrame(
-        [(u, netloc_of(u), 0, 0.0, "", 0, "GET", "") for u in seed_canon],
-        schema="url string, netloc string, depth int, priority double, "
-               "referrer string, redirects int, verb string, post_data string",
-    )
-
-    fetch_logs: list[DataFrame] = []
-    findings: list[DataFrame] = []
-    metrics: list[dict] = []
-
-    empty_log = spark.createDataFrame(
-        [], "url string, netloc string, wave int, depth int, priority double, "
-            "referrer string, verb string, post_data string, "
-            "status int, content_len long, n_links int",
-    )
-    empty_findings = spark.createDataFrame([], FINDINGS_SCHEMA)
+    # built on first use, so a resume with no wave left to run launches no job
+    tables = functools.cache(lambda: _crawl_tables(
+        spark, pages, allowed, cfg, dictionary, host_components))
 
     catalog = (
         WaveCatalog(cfg.checkpoint_dir, spark) if cfg.checkpoint_dir else None
     )
     resumed_from = catalog.last_committed_wave() if catalog else None
+    seed_findings = None  # robots findings of the seeds, part of wave 0's delta
     if resumed_from is not None:
         catalog.heal_manifest()  # this crawl is the catalog's one writer
-
-    pending_findings: list[DataFrame] = []  # pre-wave-0 (seed gating) findings
-
-    if resumed_from is not None:
         # Resume-exactly: the last committed wave's parquet IS the state.
         # Reads are lazy and carry the schema recorded at commit (no
         # checkpoint job, no schema-inference job), and the frontier size
@@ -365,24 +341,8 @@ def crawl(
             "n_frontier_next"]
         wave = resumed_from + 1
     else:
-        # Gate the seeds (wave 0 of the contract).
-        gated_seeds = _robots_gate(seeds_df, wave_tables()[1], frontier_cols)
-        blocked_seeds = gated_seeds.filter(~F.col("robots_allowed"))
-        pending_findings.append(
-            blocked_seeds.select(
-                F.lit("robots").alias("module"), "url", F.lit(0).alias("wave"),
-                F.lit("robots_blocked").alias("detail"), "referrer",
-            )
-        )
-        frontier, frontier_rows = _observe_rows(
-            gated_seeds.filter("robots_allowed").select(*frontier_cols)
-        )
-        frontier = frontier.localCheckpoint(eager=True)
-        n_frontier = frontier_rows.get["rows"]
-
-        seen = _with_identity(
-            seeds_df.select("url", "verb", "post_data"), cfg.n_shards
-        ).localCheckpoint(eager=True)
+        frontier, n_frontier, seen, seed_findings = _gate_seeds(
+            spark, seed_canon, tables().rules, cfg)
         wave = 0
 
     # `seen` is maintained as a UNION of materialized leaves: one base
@@ -393,15 +353,17 @@ def crawl(
     # seen_compact_every waves collapses the union so plan fan-in and
     # cached-leaf count stay bounded.
     seen_parts: list[DataFrame] = [seen]
+    fetch_logs: list[DataFrame] = []
+    findings: list[DataFrame] = []
+    metrics: list[dict] = []
 
-    end_wave = wave
     _sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         while n_frontier > 0 and wave < cfg.max_waves:
             t_wave = time.time()
             # Scope this wave's shuffles to the frontier volume: a wave's
             # exchanges move slim ~150 B frontier/candidate rows (the html
-            # shuffle is separately sized by n_parse below), and planning
+            # shuffle is separately sized by n_parse in _wave), and planning
             # them at the session's corpus-scale width degrades the ~30
             # stages per wave into near-empty tasks whose scheduling
             # barriers dominate (functions/tuning.py; measured ~54 -> ~47 s
@@ -413,211 +375,17 @@ def crawl(
                         max(-(-n_frontier // _WAVE_ROWS_PER_PARTITION),
                             min(8, _sess_parts)))),
             )
-            prev_frontier = frontier
-            budgets, rules, comp_map = wave_tables()
-            wave_logs: list[DataFrame] = []
-            wave_findings: list[DataFrame] = list(pending_findings)
-            pending_findings = []
-            # Persist the election ONCE, as one frame with a win flag: elected
-            # and remainder are filters of it. They feed several downstream
-            # jobs (broadcast of elected urls, the fetch join, the 404 split,
-            # next frontier) which would otherwise each recompute the window
-            # chain — the profiler showed half the wave's CPU inside
-            # broadcast-exchange recomputations before elected was persisted,
-            # and persisting the two outputs separately still ran the whole
-            # chain twice (once more under the frontier write).
-            # NOTE (r7): an "identity election" fast path was tried here —
-            # skip _elect when n_frontier <= min(all budgets), since the
-            # election is then provably the identity (the equivalence is
-            # pinned by tests/test_crawl_golden.py::
-            # test_identity_election_fast_path_equals_elect). It was
-            # REVERTED: bisected as the cause of executor heap OOMs at the
-            # 1.2M-page xheavy scaling point (N-level local-cluster[2,4,8g]
-            # died at ~wave 2 with the fast path, completed in 369 s
-            # without it — see OPTIMIZATION_r07.md X-H). The ~1 s/wave of
-            # election stages it saved on the 120k bench is not worth a
-            # memory-behavior change at scale that was never fully
-            # root-caused.
-            ranked = _elect(frontier, budgets, cfg, comp_map).persist()
-            elected, remainder = _split_election(ranked)
-            # The wave chain runs as two checkpoint jobs, parsed and gated
-            # below (ranked is cached by the first), each under a
-            # callSite.short label that names its stages for the scaling
-            # telemetry (plans/stagemetrics.py); phase_labels splits them
-            # into the elect / fetch_parse / probe_gate phases.
+            wave_tables = tables()
             t0 = time.time()
-            if cfg.phase_labels:
-                _labelled("wave_elect", elected.count)
-
-            # The two fetch shapes of step 3 (plan-asserted in
-            # tests/test_plans.py, incl. the max_by partial buffer that
-            # smuggles html under a fresh attribute name). Bucketed pages:
-            # EnsureRequirements shuffles ONLY the slim elected side into the
-            # table's buckets and the dedup agg reuses the join partitioning.
-            # Other pages: n_parse is decided before the join, so the one
-            # html shuffle lands directly in the parse partitions. Either way
-            # the elected-side left join shuffles only slim frontier columns.
-            # The html-carrying join output is consumed EXACTLY ONCE, by the
-            # parse pass (fetch misses flow through as status=404 rows), and
-            # never cached: a cache of it made every downstream `html IS
-            # NULL` filter re-read the html batches (~15 GB/run of fetch-log
-            # input in the round-4 scaling stage tables).
-            elected_urls = elected.select("url")
-            if pages_bucketed:
-                matched = pages_slim.join(elected_urls, "url")
-            else:
-                n_parse = max(2 * spark.sparkContext.defaultParallelism,
-                              -(-n_frontier // _PARSE_ROWS_PER_PARTITION))
-                matched = pages_slim.join(
-                    F.broadcast(elected_urls), "url"
-                ).repartition(n_parse, "url")
-            fetched = elected.join(latest_pages(matched), "url", "left")
-            parsed = _labelled(
-                "wave_fetch_parse" if cfg.phase_labels else "wave_chain",
-                fetched.select("url", "netloc", F.lit(wave).alias("wave"), "depth",
-                               "priority", "referrer", "redirects", "verb",
-                               "post_data", "html")
-                .mapInPandas(parse_pages_batch, PARSED_SCHEMA)
-                .localCheckpoint,
-            )
-            ok = parsed.filter(F.col("status") == 200)
-
-            wave_logs.append(
-                parsed.select(
-                    "url", "netloc", "wave", "depth", "priority", "referrer",
-                    "verb", "post_data", "status", "content_len", "n_links",
-                )
-            )
-            # ALL per-page findings — broken_link + redirect cap + checkers —
-            # from ONE scan of the parsed cache (every separate filter branch
-            # would fetch the full cached batches again; robots findings join
-            # the gated frontier below instead)
-            page_findings = wave_findings_pass(
-                parsed, cfg.max_redirects, dict_words,
-                checkers=cfg.run_checkers,
-            )
-            wave_findings.append(page_findings)
-
-            # Candidate edges: outlinks (depth+1, fresh redirect counter) plus
-            # meta-refresh redirect targets (same depth, hop counter +1 along the
-            # chain — the reference's Request carries a redirect count with a
-            # cap; over-cap chains are findings, not candidates) plus POST form
-            # requests (CONTRACT v3: identity is (verb, url, post_data), so a
-            # POSTed url is crawled independently of its GET twin).
-            # All three kinds are emitted from ONE scan of the parsed cache as
-            # a concatenated per-row struct array with a single explode — the
-            # r6 shape ran three separate filter branches over the cache and
-            # unioned them, fetching the full cached batches three times per
-            # wave (the dominant input volume of the wave_probe_gate phase:
-            # 1.75 GB/run at the 120k-page bench; guide §2.4 / §5 cache notes).
-            _cand_struct_t = ("array<struct<url:string,depth:int,"
-                              "redirects:int,verb:string,post_data:string>>")
-            _empty_cand = F.array().cast(_cand_struct_t)
-            depth_ok = (F.col("depth") + 1) <= cfg.max_depth
-            out_arr = F.when(depth_ok, F.transform(
-                "outlinks",
-                lambda u: F.struct(
-                    u.alias("url"), (F.col("depth") + 1).alias("depth"),
-                    F.lit(0).alias("redirects"), F.lit("GET").alias("verb"),
-                    F.lit("").alias("post_data"),
-                ),
-            ))
-            red_arr = F.when(
-                F.col("redirect").isNotNull()
-                & (F.col("redirects") + 1 <= cfg.max_redirects),
-                F.array(F.struct(
-                    F.col("redirect").alias("url"), F.col("depth").alias("depth"),
-                    (F.col("redirects") + 1).alias("redirects"),
-                    F.lit("GET").alias("verb"), F.lit("").alias("post_data"),
-                )),
-            )
-            form_arr = F.when(depth_ok, F.transform(
-                "post_forms",
-                lambda f: F.struct(
-                    f["url"].alias("url"), (F.col("depth") + 1).alias("depth"),
-                    F.lit(0).alias("redirects"), F.lit("POST").alias("verb"),
-                    f["data"].alias("post_data"),
-                ),
-            ))
-            cand = (
-                ok.select(
-                    F.col("url").alias("referrer"),
-                    F.explode(F.concat(
-                        F.coalesce(out_arr, _empty_cand),
-                        F.coalesce(red_arr, _empty_cand),
-                        F.coalesce(form_arr, _empty_cand),
-                    )).alias("c"),
-                )
-                .select(
-                    F.col("c.url").alias("url"), "referrer",
-                    F.col("c.depth").alias("depth"),
-                    F.col("c.redirects").alias("redirects"),
-                    F.col("c.verb").alias("verb"),
-                    F.col("c.post_data").alias("post_data"),
-                )
-                .withColumn("path", F.coalesce(F.parse_url("url", F.lit("PATH")), F.lit("")))
-                .filter(~F.lower("path").rlike(_EXT_PATTERN))
-                .withColumn("netloc", F.parse_url("url", F.lit("HOST")))
-            )
-            cand = (
-                cand.join(allowed_df, "netloc", "left_semi")
-                if allowed_df is not None
-                else cand.filter(F.col("netloc").isin(allowed))
-            )
-            cand = (
-                # dedup by request IDENTITY (verb, url, post_data) — contract v3
-                cand.groupBy("url", "netloc", "verb", "post_data")
-                .agg(F.min(F.struct("depth", "referrer", "redirects")).alias("m"))
-                .select(
-                    "url", "netloc", "verb", "post_data",
-                    F.col("m.depth").alias("depth"),
-                    F.col("m.depth").cast("double").alias("priority"),
-                    F.col("m.referrer").alias("referrer"),
-                    F.col("m.redirects").alias("redirects"),
-                )
-            )
-            cand = _with_identity(cand, cfg.n_shards)
-
-            new = cand.join(
-                seen.select("verb", "url", "post_data"),
-                ["verb", "url", "post_data"], "left_anti",
-            )
-
-            gated = _labelled(
-                "wave_probe_gate" if cfg.phase_labels else "wave_chain",
-                _robots_gate(new, rules, frontier_cols + ["url_hash", "shard"])
-                .localCheckpoint,
-            )
+            state, deltas, frontier_rows, ranked = _wave(
+                wave_tables, frontier, seen, n_frontier, cfg, wave, seed_findings)
             t_chain = time.time() - t0
-            wave_findings.append(
-                gated.filter(~F.col("robots_allowed")).select(
-                    F.lit("robots").alias("module"), "url", F.lit(wave).alias("wave"),
-                    F.lit("robots_blocked").alias("detail"), "referrer",
-                )
-            )
-
-            # Then the wave's ONE materialization of its outputs: the five
-            # independent state/delta tables, concurrently, reading the
-            # checkpoints (_materialize_wave). The next frontier's size rides along
-            # as an observed metric of its write — no count job.
-            new_frontier_rows = gated.filter("robots_allowed").select(*frontier_cols)
-            frontier_next, frontier_rows = _observe_rows(
-                remainder.select(*frontier_cols).unionByName(new_frontier_rows)
-            )
-            new_seen = gated.select("url", "verb", "post_data", "url_hash", "shard")
-            compact = wave % cfg.seen_compact_every == 0
-            # seen materializes as this wave's DELTA; the full union only on
-            # compaction waves (see seen_parts above). The frontier stays
-            # full-state (it is the small active set). Wave 0 lands on the
-            # compaction branch, so a delta chain always has a base.
-            state = {"frontier": frontier_next,
-                     "seen": seen.unionByName(new_seen) if compact else new_seen}
-            deltas = {"fetch_log": _union_all(wave_logs, empty_log),
-                      "findings": _union_all(wave_findings, empty_findings)}
+            seed_findings = None
 
             def wave_metrics():
                 return {"wave": wave, "n_frontier_next": frontier_rows.get["rows"]}
 
+            compact = _compacts(wave, cfg)
             t0 = time.time()
             out = _materialize_wave(
                 spark, catalog, wave, state, deltas,
@@ -628,10 +396,16 @@ def crawl(
                         "n_shards": cfg.n_shards},
             )
             t_state = time.time() - t0
+            # Release superseded per-wave state: without this, a long crawl
+            # leaks one cached RDD per wave per state table and everything
+            # after it pays the GC/block-manager tax. Seen deltas are not
+            # superseded until a compaction wave collapses them.
+            frontier.unpersist()
+            ranked.unpersist()
             frontier = out["frontier"]
             if compact:
                 seen = out["seen"]
-                for part in seen_parts:  # superseded by the collapsed union
+                for part in seen_parts:
                     part.unpersist()
                 seen_parts = [seen]
             else:
@@ -642,61 +416,68 @@ def crawl(
                 findings.append(out["findings"])
             metrics.append(wave_metrics())
             n_frontier = metrics[-1]["n_frontier_next"]
-
-            # Release superseded per-wave state: without this, a long crawl
-            # leaks one cached RDD per wave per state table and everything after
-            # it pays the GC/block-manager tax. (seen deltas are NOT superseded
-            # — they compose the live union until a compaction wave collapses
-            # them, handled above.)
-            prev_frontier.unpersist()
-            ranked.unpersist()
             if cfg.verbose:
                 print(f"[crawl] wave={wave} next_frontier={n_frontier} "
                       f"wall={time.time()-t_wave:.2f}s "
                       f"(chain={t_chain:.1f} state={t_state:.1f})", flush=True)
-            end_wave = wave + 1
             wave += 1
     finally:
         # the wave scope is session-wide state — always restore it
         spark.conf.set("spark.sql.shuffle.partitions", str(_sess_parts))
 
-    findings.extend(pending_findings)  # loop never ran (e.g. all seeds blocked)
-
-    robots.unpersist()
+    if seed_findings is not None:  # no wave ran (e.g. every seed blocked)
+        findings.append(seed_findings)
 
     if catalog is not None and catalog.last_committed_wave() is not None:
         last = catalog.last_committed_wave()
         fetch_log = catalog.read_deltas_through(spark, "fetch_log", last)
         findings_df = catalog.read_deltas_through(spark, "findings", last)
     else:
-        fetch_log = _union_all(fetch_logs, empty_log)
-        findings_df = _union_all(findings, empty_findings)
+        fetch_log = _union_all(fetch_logs, spark.createDataFrame([], _LOG_SCHEMA))
+        findings_df = _union_all(findings, spark.createDataFrame([], FINDINGS_SCHEMA))
     return CrawlResult(
-        fetch_log=fetch_log, findings=findings_df, seen=seen, waves=end_wave,
+        fetch_log=fetch_log, findings=findings_df, seen=seen, waves=wave,
         metrics=metrics, _cached=[*fetch_logs, *findings, *seen_parts, frontier],
     )
 
 
-def _wave_tables(
-    robots: DataFrame, cfg: CrawlConfig, host_components: DataFrame | None
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    """(budgets, rules, comp_map): the per-crawl tables every wave reads.
+@dataclass(frozen=True)
+class _CrawlTables:
+    """What every wave reads and no wave changes."""
+    pages: DataFrame               # (url, warc_ts, html) of the corpus
+    pages_bucketed: bool           # the fetch shape (step 3)
+    budgets: DataFrame             # (netloc, budget)
+    rules: DataFrame               # (netloc, _rules), _robots_gate's form
+    comp_map: DataFrame | None     # (netloc, _grp, _gbudget), see _elect
+    allowed: list[str]             # netlocs candidates may have
+    allowed_df: DataFrame | None   # the same, as a semi-join side when large
+    dict_words: list[str] | None   # spelling dictionary for the checkers
 
-    They are CHECKPOINTS, not caches, as are a wave's own parsed and gated
-    tables: a plan over a cache embeds the cached plan, and Spark renders
-    it, both AQE versions of it, into every SQL-execution and
-    adaptive-update event, so nested caches grow that text 2x per level.
-    With caches here, crawl_polite's queries carried up to 5 MB of plan
-    text each, rebuilt on every re-plan: a quarter of the JVM's CPU
-    samples. A checkpoint's plan is one leaf."""
-    budgets = robots.mapInPandas(
-        _budgets_fn(cfg.budget_per_host), _BUDGET_SCHEMA
-    ).localCheckpoint(eager=True)
-    # kept in ARRAY form (one row per netloc): every wave's gate join is
-    # fan-out-free and needs no re-aggregation (_robots_gate)
-    rules = _rules_array(
-        robots.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
-    ).localCheckpoint(eager=True)
+
+def _crawl_tables(
+    spark: SparkSession, pages: DataFrame, allowed: list[str], cfg: CrawlConfig,
+    dictionary: DataFrame | None, host_components: DataFrame | None,
+) -> _CrawlTables:
+    """Build the per-crawl tables. budgets, rules and comp_map are
+    CHECKPOINTS, not caches, as are a wave's own parsed and gated tables: a
+    plan over a cache embeds the cached plan, and Spark renders it, both AQE
+    versions of it, into every SQL-execution and adaptive-update event, so
+    nested caches grow that text 2x per level. With caches here,
+    crawl_polite's queries carried up to 5 MB of plan text each, rebuilt on
+    every re-plan: a quarter of the JVM's CPU samples. A checkpoint's plan
+    is one leaf."""
+    robots = robots_from_pages(pages).persist()
+    try:
+        budgets = robots.mapInPandas(
+            _budgets_fn(cfg.budget_per_host), _BUDGET_SCHEMA
+        ).localCheckpoint(eager=True)
+        # kept in ARRAY form (one row per netloc): every wave's gate join is
+        # fan-out-free and needs no re-aggregation (_robots_gate)
+        rules = _rules_array(
+            robots.mapInPandas(_compile_rules_batches, _RULES_SCHEMA)
+        ).localCheckpoint(eager=True)
+    finally:
+        robots.unpersist()
 
     comp_map = None
     if host_components is not None:
@@ -720,17 +501,237 @@ def _wave_tables(
                 "netloc",
                 # '\n' can never appear in a netloc (host[:port] — urlsplit
                 # rejects control characters), so the prefix cannot collide
-                # with a real netloc group key. NOTE: ':' was the old
-                # separator and CAN occur in a netloc (non-default port,
-                # functions/urls.py keeps it): a host literally named
-                # 'component' with port N would have collided with the
-                # component-N pool and silently shared its election.
+                # with a real netloc group key; ':' can (a non-default port).
                 F.concat(F.lit("component\n"), "_comp").alias("_grp"),
                 "_gbudget",
             )
             .localCheckpoint(eager=True)
         )
-    return budgets, rules, comp_map
+
+    # Small allow-lists inline as an `isin` literal (codegen-friendly); an
+    # open-web crawl with 10^5+ allowed hosts would bloat every wave's plan
+    # with a giant literal, so large lists become a broadcast semi-join.
+    allowed_df = None
+    if len(allowed) > _ISIN_MAX_NETLOCS:
+        allowed_df = F.broadcast(
+            spark.createDataFrame([(n,) for n in allowed], "netloc string")
+        )
+    # Version dedup (as-of max warc_ts) happens per wave on the *matched*
+    # rows only, so the big html column is never shuffled corpus-wide or
+    # cached. The join's shape follows from the pages scan's partitioning
+    # (step 3 of the module docstring); planning it launches no job.
+    pages_slim = pages.select("url", "warc_ts", "html")
+    # The spelling dictionary is collected ONCE for all waves: the checkers
+    # fold it into the fused findings scan as an array_except literal
+    # (checkers._checker_structs); over checkers.DICT_WORDS_CAP rows it raises.
+    dict_words = None
+    if dictionary is not None and cfg.run_checkers:
+        dict_words = collect_dictionary(dictionary)
+    return _CrawlTables(pages_slim, bucketed_on_url(pages_slim), budgets, rules,
+                        comp_map, allowed, allowed_df, dict_words)
+
+
+def _gate_seeds(
+    spark: SparkSession, seed_canon: list[str], rules: DataFrame, cfg: CrawlConfig,
+) -> tuple[DataFrame, int, DataFrame, DataFrame]:
+    """Wave 0 of the contract: (frontier, its size, seen, the seeds' robots
+    findings). Every seed enters seen; only the robots-allowed ones enter
+    the frontier."""
+    seeds_df = spark.createDataFrame(
+        [(u, netloc_of(u), 0, 0.0, "", 0, "GET", "") for u in seed_canon],
+        schema=_FRONTIER_SCHEMA,
+    )
+    gated, blocked = _gate(seeds_df, rules, _FRONTIER_COLS, 0)
+    frontier, frontier_rows = _observe_rows(
+        gated.filter("robots_allowed").select(*_FRONTIER_COLS)
+    )
+    frontier = frontier.localCheckpoint(eager=True)
+    seen = _with_identity(
+        seeds_df.select("url", "verb", "post_data"), cfg.n_shards
+    ).localCheckpoint(eager=True)
+    return frontier, frontier_rows.get["rows"], seen, blocked
+
+
+def _compacts(wave: int, cfg: CrawlConfig) -> bool:
+    """True when `wave` commits seen in full rather than as a delta. Wave 0
+    always does, so a delta chain always has a base."""
+    return wave % cfg.seen_compact_every == 0
+
+
+def _wave(
+    tables: _CrawlTables, frontier: DataFrame, seen: DataFrame, n_frontier: int,
+    cfg: CrawlConfig, wave: int, carried_findings: DataFrame | None = None,
+) -> tuple[dict[str, DataFrame], dict[str, DataFrame], Observation, DataFrame]:
+    """One BFS wave as one DataFrame program (steps 2-9 of the module
+    docstring): (state, deltas, frontier_rows, ranked).
+
+    state is {frontier, seen}: the next frontier, and seen as this wave
+    commits it (the full union on a compaction wave, else the wave's new
+    requests). deltas is {fetch_log, findings}; the findings include
+    `carried_findings`, the seeds' robots findings on a fresh crawl's first
+    wave. frontier_rows counts the next frontier's rows once its write has
+    run. ranked is the cached election, for the caller to release after
+    that write.
+
+    Writes nothing and sets no conf. Its only jobs are the two labelled
+    checkpoints, parsed and gated (wave_chain; with cfg.phase_labels, the
+    wave_elect count and then wave_fetch_parse and wave_probe_gate)."""
+    # Persist the election ONCE, as one frame with a win flag: elected and
+    # remainder are filters of it, so the window chain runs once per wave
+    # and not again under each job that reads them. There is no
+    # identity-election fast path: it caused executor OOMs at scale
+    # (OPTIMIZATION_r07.md X-H).
+    ranked = _elect(frontier, tables.budgets, cfg, tables.comp_map).persist()
+    elected, remainder = _split_election(ranked)
+    if cfg.phase_labels:
+        _labelled("wave_elect", elected.count)
+
+    # The two fetch shapes of step 3 (plan-asserted in tests/test_plans.py).
+    # Bucketed pages: only the slim elected side shuffles into the table's
+    # buckets and the dedup agg reuses the join partitioning. Other pages:
+    # the one html shuffle lands directly in the n_parse parse partitions.
+    # The html-carrying join output is read exactly once, by the parse pass
+    # (fetch misses flow through as status=404 rows), and never cached: a
+    # cache of it made every later `html IS NULL` filter re-read the html.
+    elected_urls = elected.select("url")
+    if tables.pages_bucketed:
+        matched = tables.pages.join(elected_urls, "url")
+    else:
+        sc = SparkContext.getOrCreate()
+        n_parse = max(2 * sc.defaultParallelism,
+                      -(-n_frontier // _PARSE_ROWS_PER_PARTITION))
+        matched = tables.pages.join(
+            F.broadcast(elected_urls), "url"
+        ).repartition(n_parse, "url")
+    fetched = elected.join(latest_pages(matched), "url", "left")
+    parsed = _labelled(
+        "wave_fetch_parse" if cfg.phase_labels else "wave_chain",
+        fetched.select("url", "netloc", F.lit(wave).alias("wave"), "depth",
+                       "priority", "referrer", "redirects", "verb",
+                       "post_data", "html")
+        .mapInPandas(parse_pages_batch, PARSED_SCHEMA)
+        .localCheckpoint,
+    )
+    # ALL per-page findings — broken_link + redirect cap + checkers — from
+    # ONE scan of the parsed checkpoint; robots findings come from the gate
+    page_findings = wave_findings_pass(
+        parsed, cfg.max_redirects, tables.dict_words, checkers=cfg.run_checkers,
+    )
+
+    new = _candidates(parsed.filter(F.col("status") == 200), tables, cfg).join(
+        seen.select("verb", "url", "post_data"),
+        ["verb", "url", "post_data"], "left_anti",
+    )
+    gated, blocked = _gate(
+        new, tables.rules, _FRONTIER_COLS + ["url_hash", "shard"], wave,
+        label="wave_probe_gate" if cfg.phase_labels else "wave_chain",
+    )
+
+    frontier_next, frontier_rows = _observe_rows(
+        remainder.select(*_FRONTIER_COLS).unionByName(
+            gated.filter("robots_allowed").select(*_FRONTIER_COLS))
+    )
+    new_seen = gated.select("url", "verb", "post_data", "url_hash", "shard")
+    state = {"frontier": frontier_next,
+             "seen": seen.unionByName(new_seen) if _compacts(wave, cfg) else new_seen}
+    findings = [f for f in (carried_findings, page_findings, blocked) if f is not None]
+    deltas = {"fetch_log": parsed.select(*_LOG_COLS),
+              "findings": functools.reduce(DataFrame.unionByName, findings)}
+    return state, deltas, frontier_rows, ranked
+
+
+def _candidates(ok: DataFrame, tables: _CrawlTables, cfg: CrawlConfig) -> DataFrame:
+    """Step 6: the wave's candidate requests from its fetched pages, deduped
+    by request identity (verb, url, post_data), with the identity columns.
+
+    Outlinks (depth+1, fresh redirect counter), meta-refresh redirect
+    targets (same depth, hop counter +1: over-cap chains are findings, not
+    candidates) and POST form requests (CONTRACT v3: a POSTed url is
+    crawled independently of its GET twin). All three come from ONE scan of
+    the parsed checkpoint, as one concatenated struct array and a single
+    explode: a filter branch per kind re-reads the parsed batches per kind."""
+    cand_t = "array<struct<url:string,depth:int,redirects:int,verb:string,post_data:string>>"
+    empty = F.array().cast(cand_t)
+    depth_ok = (F.col("depth") + 1) <= cfg.max_depth
+    out_arr = F.when(depth_ok, F.transform(
+        "outlinks",
+        lambda u: F.struct(
+            u.alias("url"), (F.col("depth") + 1).alias("depth"),
+            F.lit(0).alias("redirects"), F.lit("GET").alias("verb"),
+            F.lit("").alias("post_data"),
+        ),
+    ))
+    red_arr = F.when(
+        F.col("redirect").isNotNull()
+        & (F.col("redirects") + 1 <= cfg.max_redirects),
+        F.array(F.struct(
+            F.col("redirect").alias("url"), F.col("depth").alias("depth"),
+            (F.col("redirects") + 1).alias("redirects"),
+            F.lit("GET").alias("verb"), F.lit("").alias("post_data"),
+        )),
+    )
+    form_arr = F.when(depth_ok, F.transform(
+        "post_forms",
+        lambda f: F.struct(
+            f["url"].alias("url"), (F.col("depth") + 1).alias("depth"),
+            F.lit(0).alias("redirects"), F.lit("POST").alias("verb"),
+            f["data"].alias("post_data"),
+        ),
+    ))
+    cand = (
+        ok.select(
+            F.col("url").alias("referrer"),
+            F.explode(F.concat(
+                F.coalesce(out_arr, empty),
+                F.coalesce(red_arr, empty),
+                F.coalesce(form_arr, empty),
+            )).alias("c"),
+        )
+        .select(
+            F.col("c.url").alias("url"), "referrer",
+            F.col("c.depth").alias("depth"),
+            F.col("c.redirects").alias("redirects"),
+            F.col("c.verb").alias("verb"),
+            F.col("c.post_data").alias("post_data"),
+        )
+        .withColumn("path", F.coalesce(F.parse_url("url", F.lit("PATH")), F.lit("")))
+        .filter(~F.lower("path").rlike(_EXT_PATTERN))
+        .withColumn("netloc", F.parse_url("url", F.lit("HOST")))
+    )
+    cand = (
+        cand.join(tables.allowed_df, "netloc", "left_semi")
+        if tables.allowed_df is not None
+        else cand.filter(F.col("netloc").isin(tables.allowed))
+    )
+    cand = (
+        cand.groupBy("url", "netloc", "verb", "post_data")
+        .agg(F.min(F.struct("depth", "referrer", "redirects")).alias("m"))
+        .select(
+            "url", "netloc", "verb", "post_data",
+            F.col("m.depth").alias("depth"),
+            F.col("m.depth").cast("double").alias("priority"),
+            F.col("m.referrer").alias("referrer"),
+            F.col("m.redirects").alias("redirects"),
+        )
+    )
+    return _with_identity(cand, cfg.n_shards)
+
+
+def _gate(
+    df: DataFrame, rules: DataFrame, passthrough: list[str], wave: int,
+    label: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Step 8, for the seeds and for each wave's new requests: (gated, the
+    robots_blocked findings). With `label`, gated is first checkpointed in
+    a job under that label, so its readers do not re-run the gate."""
+    gated = _robots_gate(df, rules, passthrough)
+    if label is not None:
+        gated = _labelled(label, gated.localCheckpoint)
+    blocked = gated.filter(~F.col("robots_allowed")).select(
+        F.lit("robots").alias("module"), "url", F.lit(wave).alias("wave"),
+        F.lit("robots_blocked").alias("detail"), "referrer",
+    )
+    return gated, blocked
 
 
 def _labelled(label: str, action: Callable[[], T]) -> T:
@@ -801,7 +802,7 @@ def _elect(
     cached frame and the window chain runs once per wave (two separately
     persisted outputs each ran the whole chain). The group
     is the netloc by default; with `comp_map` (netloc -> mirror-cluster
-    group + pooled budget, built in crawl() from connected_components
+    group + pooled budget, built by _crawl_tables from connected_components
     output), member hosts share one election pool — per-component crawl
     budgeting.
 
@@ -887,11 +888,8 @@ def _rules_array(rules: DataFrame) -> DataFrame:
 def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> DataFrame:
     """R1 gate: join pre-compiled per-netloc rule ARRAYS on netloc; the
     first-match election (first matching rule in file order decides, no
-    rule -> allow) runs row-locally over the array — no post-join
-    re-aggregation. The r6 shape joined LONG-form rule rows and collapsed
-    the multiplied rows with a groupBy over every passthrough column: one
-    full exchange of the gated candidate set per wave whose only job was
-    undoing the join fan-out (guide §2.4: remove shuffles outright). The
+    rule -> allow) runs row-locally over the array. One row per netloc keeps
+    the join fan-out-free, so no exchange re-aggregates its output. The
     match string is robotparser's own (robots.match_path, computed in ONE
     vectorized pass — each url is gated exactly once in its lifetime, so
     this is a one-shot Arrow round-trip per url, not per wave). Catalyst
@@ -904,8 +902,8 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
     frontier/seen row. Both callers satisfy it: the candidates are grouped
     by request identity and the seeds are a sorted set.
 
-    `rules` is the (netloc, _rules) form _rules_array builds (the crawl
-    loop checkpoints it once per crawl)."""
+    `rules` is the (netloc, _rules) form _rules_array builds
+    (_crawl_tables checkpoints it once per crawl)."""
     first_hit = F.get(
         F.filter(
             F.col("_rules"),
@@ -924,39 +922,5 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
         .select(
             *passthrough,
             F.coalesce(first_hit["allow"], F.lit(True)).alias("robots_allowed"),
-        )
-    )
-
-
-def resolve_redirect_chains(edges: DataFrame, max_hops: int = 4) -> DataFrame:
-    """Resolve each redirect source's final destination over an edge table
-    (src, dst), hop-capped. Returns (src, final, hops, capped).
-
-    Each iteration is ONE equi-join advancing every unresolved cursor a hop
-    — k joins total for a k-hop cap, never an all-pairs or transitive-
-    closure expansion, so it scales to web-sized redirect tables. Cycles
-    terminate via the cap and surface as capped=true (as does any chain
-    longer than max_hops). Assumes functional edges (one outgoing redirect
-    per src), which is what meta-refresh/3xx semantics give."""
-    cur = edges.select("src", F.col("dst").alias("cur"), F.lit(1).alias("hops"))
-    step = edges.select(F.col("src").alias("cur"), F.col("dst").alias("_d"))
-    for _ in range(max_hops - 1):
-        cur = (
-            cur.join(step, "cur", "left")
-            .select(
-                "src",
-                F.coalesce("_d", F.col("cur")).alias("cur"),
-                F.when(F.col("_d").isNotNull(), F.col("hops") + 1)
-                .otherwise(F.col("hops")).alias("hops"),
-            )
-        )
-    more = edges.select(F.col("src").alias("cur")).distinct().withColumn(
-        "_more", F.lit(True)
-    )
-    return (
-        cur.join(more, "cur", "left")
-        .select(
-            "src", F.col("cur").alias("final"), "hops",
-            F.coalesce("_more", F.lit(False)).alias("capped"),
         )
     )

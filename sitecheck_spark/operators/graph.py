@@ -25,6 +25,10 @@ the system, exactly as in the "toy" damped update above. For crawl
 prioritization this is the desired behavior (a page nobody can leave
 should not inflate everyone else); the ranks are therefore NOT a
 probability distribution (sum < n * R0 when sinks exist).
+
+`connected_components` groups hosts into mirror clusters (the crawl's
+per-component budgets), and `resolve_redirect_chains` follows redirect
+edges to their final target, one join per hop.
 """
 
 from __future__ import annotations
@@ -277,3 +281,37 @@ def connected_components(
         finally:
             for h in persisted + checkpoints + [sym]:
                 _release_leaf(h)
+
+
+def resolve_redirect_chains(edges: DataFrame, max_hops: int = 4) -> DataFrame:
+    """Resolve each redirect source's final destination over an edge table
+    (src, dst), hop-capped. Returns (src, final, hops, capped).
+
+    Each iteration is ONE equi-join advancing every unresolved cursor a hop
+    — k joins total for a k-hop cap, never an all-pairs or transitive-
+    closure expansion, so it scales to web-sized redirect tables. Cycles
+    terminate via the cap and surface as capped=true (as does any chain
+    longer than max_hops). Assumes functional edges (one outgoing redirect
+    per src), which is what meta-refresh/3xx semantics give."""
+    cur = edges.select("src", F.col("dst").alias("cur"), F.lit(1).alias("hops"))
+    step = edges.select(F.col("src").alias("cur"), F.col("dst").alias("_d"))
+    for _ in range(max_hops - 1):
+        cur = (
+            cur.join(step, "cur", "left")
+            .select(
+                "src",
+                F.coalesce("_d", F.col("cur")).alias("cur"),
+                F.when(F.col("_d").isNotNull(), F.col("hops") + 1)
+                .otherwise(F.col("hops")).alias("hops"),
+            )
+        )
+    more = edges.select(F.col("src").alias("cur")).distinct().withColumn(
+        "_more", F.lit(True)
+    )
+    return (
+        cur.join(more, "cur", "left")
+        .select(
+            "src", F.col("cur").alias("final"), "hops",
+            F.coalesce("_more", F.lit(False)).alias("capped"),
+        )
+    )

@@ -82,10 +82,6 @@ def count_shuffles(df: DataFrame) -> int:
     return len(re.findall(r"\(\d+\) Exchange", formatted_plan(df)))
 
 
-def has_whole_stage_codegen(df: DataFrame) -> bool:
-    return "WholeStageCodegen" in formatted_plan(df)
-
-
 def executed_nodes(df: DataFrame, into_caches: bool = False) -> list:
     """The JVM nodes of `df`'s executed physical plan (run an action on `df`
     first). Walks through adaptive-execution wrappers and query stages. A

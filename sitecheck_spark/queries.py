@@ -684,7 +684,7 @@ def q_heavy_hitters(spark, sf_dir):
        FROM last l WHERE rk = 1""",
 )
 def q_redirect_chains(spark, sf_dir):
-    """Redirect-chain resolution (crawl.resolve_redirect_chains) over a
+    """Redirect-chain resolution (graph.resolve_redirect_chains) over a
     synthetic functional edge table: every 5th doc redirects to
     (id*7+3) mod n. Hop cap 4; capped chains (incl. cycles) flagged."""
     docs = _t_raw(spark, sf_dir, "documents")
@@ -693,7 +693,7 @@ def q_redirect_chains(spark, sf_dir):
         F.col("doc_id").alias("src"),
         ((F.col("doc_id") * 7 + 3) % n).alias("dst"),
     )
-    from sitecheck_spark.crawl import resolve_redirect_chains
+    from sitecheck_spark.operators.graph import resolve_redirect_chains
 
     return resolve_redirect_chains(edges, max_hops=4)
 

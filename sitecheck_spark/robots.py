@@ -1,21 +1,16 @@
 """robots.txt gating (SURVEY.md §2.8 R1) — stdlib urllib.robotparser.
 
-Verdicts are evaluated in a vectorized mapInPandas pass over
-(url, netloc, rules) with a per-batch parser cache; upstream the frontier is
-repartitioned by netloc so batches are netloc-clustered and each parser is
-built once per netloc per batch. At web scale the robots table is joined on
-netloc (Catalyst broadcasts it when small, SMJ co-partitioned with the
-politeness window's netloc shuffle otherwise).
+The crawl compiles each host's rules once with robotparser
+(crawl._compile_rules_batches) and gates urls against them in the JVM,
+matching the path string `match_path` builds (crawl._robots_gate).
+`allowed` is the per-url reference verdict the tests and golden.py use.
 """
 
 from __future__ import annotations
 
 import io
 import urllib.parse
-from typing import Iterable, Iterator
 from urllib.robotparser import RobotFileParser
-
-import pandas as pd
 
 USER_AGENT = "sitecheck-spark"
 
@@ -63,33 +58,3 @@ def crawl_delay(rules: str | None) -> float | None:
         return float(d) if d is not None else None
     except Exception:
         return None
-
-
-ROBOTS_VERDICT_SCHEMA = "url string, robots_allowed boolean"
-
-
-def eval_robots_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: (url, netloc, rules) -> (url, robots_allowed).
-
-    Parser cache keyed by netloc — effective because the input is
-    repartitioned by netloc before this pass.
-    """
-    cache: dict[str, RobotFileParser | None] = {}
-    for pdf in batches:
-        verdicts = []
-        for url, netloc, rules in zip(pdf["url"], pdf["netloc"], pdf["rules"]):
-            if rules is None or (isinstance(rules, float) and pd.isna(rules)):
-                verdicts.append(True)
-                continue
-            rp = cache.get(netloc)
-            if rp is None:
-                try:
-                    rp = _build_parser(rules)
-                except Exception:
-                    rp = None
-                cache[netloc] = rp
-            try:
-                verdicts.append(rp.can_fetch(USER_AGENT, url) if rp else True)
-            except Exception:
-                verdicts.append(True)
-        yield pd.DataFrame({"url": pdf["url"], "robots_allowed": verdicts})

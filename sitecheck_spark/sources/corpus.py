@@ -358,12 +358,6 @@ def make_seeds_pdf() -> pd.DataFrame:
     )
 
 
-def make_robots_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"netloc": list(ROBOTS_BODIES), "rules": list(ROBOTS_BODIES.values())}
-    )
-
-
 def make_dictionary_pdf() -> pd.DataFrame:
     return pd.DataFrame({"word": DICTIONARY})
 

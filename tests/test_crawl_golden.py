@@ -374,3 +374,75 @@ def test_election_equals_brute_force_per_host_top_budget(spark):
     assert len(got_elected) == len(set(got_elected))
     assert set(got_elected) == want_elected
     assert sorted(got_remainder) == sorted(want_remainder)
+
+
+def test_wave_step_is_pure_and_keeps_its_invariants(spark, corpus_pdf):
+    """One wave step, called directly on a gated seed frontier with no
+    catalog: its only jobs are its wave_chain checkpoints, it leaves the
+    session conf alone, its fetch-log delta holds exactly the elected
+    requests, its next frontier is the election remainder plus the
+    robots-allowed new requests, and the seen set it returns is unique by
+    request identity."""
+    from sitecheck_spark import robots as robots_mod
+    from sitecheck_spark.crawl import (
+        _crawl_tables,
+        _gate_seeds,
+        _split_election,
+        _wave,
+    )
+    from sitecheck_spark.functions.urls import canonicalize, netloc_of
+
+    from conftest import jobs_launched_by
+
+    # four pages per host, so the budget of 3 leaves a remainder, plus a
+    # robots-blocked seed
+    urls = sorted(u for u in corpus_pdf.url if not u.endswith("/robots.txt"))
+    by_host = {}
+    for u in urls:
+        by_host.setdefault(netloc_of(u), []).append(u)
+    seeds = sorted({canonicalize(u) for host_urls in by_host.values()
+                    for u in host_urls[:4]}
+                   | {"https://alpha.example.org/private/4.html"})
+    cfg = CrawlConfig(budget_per_host=BUDGET, n_shards=4, salt_buckets=2,
+                      run_checkers=False)
+    pages = spark.createDataFrame(corpus_pdf, schema=PAGES_SCHEMA)
+    tables = _crawl_tables(spark, pages, sorted(by_host), cfg, None, None)
+    frontier, n_frontier, seen, _ = _gate_seeds(spark, seeds, tables.rules, cfg)
+    key = lambda r: (r["verb"], r["url"], r["post_data"])
+    seen_before = {key(r) for r in seen.collect()}
+
+    conf_before = spark.conf.getAll
+    (state, deltas, frontier_rows, ranked), jobs = jobs_launched_by(
+        spark, lambda: _wave(tables, frontier, seen, n_frontier, cfg, 0))
+    conf_after = spark.conf.getAll
+    try:
+        tracker = spark.sparkContext.statusTracker()
+        names = {tracker.getStageInfo(s).name
+                 for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        elected, remainder = _split_election(ranked)
+        elected_rows = Counter(map(key, elected.collect()))
+        remainder_rows = Counter(map(key, remainder.collect()))
+        log = deltas["fetch_log"].collect()
+        next_frontier = Counter(map(key, state["frontier"].collect()))
+        seen_rows = state["seen"].collect()
+    finally:
+        ranked.unpersist()
+        frontier.unpersist()
+        seen.unpersist()
+
+    assert jobs and names == {"wave_chain"}, names
+    assert conf_after == conf_before
+    assert Counter(map(key, log)) == elected_rows
+    assert {r["wave"] for r in log} == {0}
+    assert sum(elected_rows.values()) == n_frontier - sum(remainder_rows.values())
+    assert remainder_rows
+
+    identities = Counter(map(key, seen_rows))
+    assert max(identities.values()) == 1
+    new = [r for r in seen_rows if key(r) not in seen_before]
+    assert set(identities) >= seen_before and new
+    allowed_new = Counter(
+        key(r) for r in new
+        if robots_mod.allowed(ROBOTS_BODIES.get(netloc_of(r["url"])), r["url"]))
+    assert next_frontier == remainder_rows + allowed_new
+    assert frontier_rows.get["rows"] == sum(next_frontier.values())

@@ -442,3 +442,40 @@ def test_new_urls_are_one_exact_anti_join(spark, monkeypatch):
     for names, joins in plans:
         assert "FlatMapCoGroupsInPandas" not in names, names
         assert joins.count("LeftAnti") == 1, joins
+
+
+def test_crawl_at_session_width_200_launches_no_200_task_stage(spark,
+                                                               pages_parquet):
+    """The per-crawl tables are built at the core count, not at the
+    session's shuffle width: a 2-wave crawl in a session at Spark's default
+    width of 200 launches no stage of 200 or more tasks. Built at the
+    session width, the budgets and rules checkpoints kept 200 hash
+    partitions, and every wave's election and gate joins shuffled the
+    frontier to match them."""
+    from sitecheck_spark.crawl import CrawlConfig, crawl
+    from sitecheck_spark.sources.corpus import make_seeds_pdf
+
+    pages = spark.read.parquet(pages_parquet)
+    seeds = make_seeds_pdf().url.tolist()
+
+    def run():
+        res = crawl(spark, pages, seeds,
+                    CrawlConfig(budget_per_host=3, max_waves=2, n_shards=4,
+                                salt_buckets=2, run_checkers=False))
+        waves = res.waves
+        res.release()
+        return waves
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        waves, jobs = jobs_launched_by(spark, run)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s)
+              for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    wide = [(s.stageId, s.name, s.numTasks) for s in stages
+            if s is not None and s.numTasks >= 200]
+    assert waves == 2 and jobs
+    assert wide == []
